@@ -5,18 +5,19 @@ BSP semantics per the Pregel/GraphX model [P]: each superstep is
   state    = state ⨝ messages → vertex update
 with driver-side iteration control (SURVEY.md §3.4).
 
-Scale design:
-- Vertex state is eagerly ``localCheckpoint``-ed every superstep —
-  truncates lineage (else the plan doubles per superstep, the
-  GraphX-on-DataFrames hazard [P]) AND breaks recompute (see
-  ``_truncate``).
-- Edges are symmetrized, partitioned by src, and cached ONCE; each
-  superstep's message join reuses that partitioning, so only the small
-  vertex-state side shuffles (``symmetrize``).
-- Partition count adapts to edge volume (``symmetrize``); AQE is off
-  and shuffle partitions pinned inside the loop (``_superstep_env``) —
-  both cut fixed per-superstep scheduling overhead, the dominant cost
-  for small supersteps.
+Scale design — every loop runs inside one ``LoopScope``:
+- Vertex state is ``localCheckpoint``-ed every superstep — truncates
+  lineage (else the plan doubles per superstep, the
+  GraphX-on-DataFrames hazard [P]) AND breaks recompute (eager versus
+  lazy: see ``LoopScope``).
+- Edges are symmetrized (``symmetrize``), partitioned by src and cached
+  ONCE (``LoopScope.layout``); each superstep's message join reuses
+  that partitioning, so only the small vertex-state side shuffles.
+- The partition count adapts to edge volume (``LoopScope.layout``); AQE
+  is off and shuffle partitions are pinned for the whole loop — both
+  cut fixed per-superstep scheduling overhead, the dominant cost for
+  small supersteps. The scope restores the conf and drops its caches
+  on exit, also when a superstep raises.
 - Convergence checks are tiny jobs (``isEmpty`` over the checkpointed
   state), run each superstep; fixed-iteration algorithms skip them.
 """
@@ -24,119 +25,142 @@ Scale design:
 from __future__ import annotations
 
 import functools
-from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-@contextmanager
-def _superstep_env(edges: DataFrame, directed: bool = False):
-    """Loop-scoped execution settings; yields the symmetrized edge set.
+class LoopScope:
+    """Execution scope of ONE iterative driver loop — the superstep
+    lifecycle every loop in this package and in ``operators/graph.py``
+    shares (the Pregelix template: one superstep dataflow, the
+    iteration machinery factored out of the algorithms)::
 
-    - AQE off: every superstep re-runs the same fixed, small,
-      known-size shuffles; AQE's runtime re-planning buys nothing there
-      and adds per-stage planning jobs (~16% of superstep wall time
-      measured on the sf0.1 PageRank).
-    - ``spark.sql.shuffle.partitions`` pinned BEFORE the symmetrized
-      edge build, provisionally to min(session conf, cluster
-      parallelism), then tightened to the edge-adapted count from
-      ``symmetrize``. Without the pin, every superstep's groupBy/window
-      — and the edge distinct itself — runs at the session default,
-      200 reduce tasks per stage on a vanilla session (measured: sf0.01
-      core_number 23 s unpinned vs 8 s pinned).
+        with LoopScope(spark) as scope:
+            sym = scope.layout(symmetrize(edges), "src")
+            ...supersteps...
 
-    Settings are restored and the edge cache dropped on exit, so
-    one-shot queries keep the session's defaults and AQE's
-    coalesce/skew benefits.
+    - Entry saves the session conf, turns AQE off and pins
+      ``spark.sql.shuffle.partitions``. AQE off: every superstep re-runs
+      the same fixed, small, known-size shuffles; AQE's runtime
+      re-planning buys nothing there and adds per-stage planning jobs
+      (~16% of superstep wall time measured on the sf0.1 PageRank).
+      Partitions pinned BEFORE any loop cache is registered: the
+      CacheManager compiles a cached plan with the conf in force at
+      registration, so caching first would bake session-default
+      200-partition shuffles into the edge build; without the pin,
+      every superstep's groupBy/window runs at the session default
+      (measured: sf0.01 core_number 23 s unpinned vs 8 s pinned).
+    - ``divisor`` picks the provisional width,
+      ``max(4, min(session partitions, defaultParallelism) // divisor)``.
+      Loops that size by edge volume keep ``divisor=1`` and tighten the
+      width in ``layout``; the exact-integer loops of
+      ``operators/graph.py`` pass ``divisor=4`` and never count, which
+      saves the sizing jobs on every call.
+    - ``layout`` builds the loop's resident edge layout; ``cache``
+      registers any other loop-scoped cache (loop invariants, a second
+      edge layout keyed the other way).
+    - Exit — normal OR exceptional — unpersists every registered cache
+      and restores the conf, so one-shot queries keep the session's
+      defaults and AQE's coalesce/skew benefits, and a loop that raises
+      leaves neither a pinned conf nor a resident cache behind. A loop
+      must MATERIALIZE its result (an eager checkpoint) before the
+      scope exits: execution after restore runs at session settings
+      against dropped caches.
+
+    Vertex state is ``localCheckpoint``-ed every superstep. This does
+    two jobs at once: it truncates lineage (otherwise the plan doubles
+    per superstep — the GraphX-on-DataFrames hazard) and it breaks
+    recompute (without it, the convergence check and the next
+    superstep each re-execute this superstep's shuffles, compounding
+    ~3x per iteration — measured 40s → 9s on the sf0.1 WCC when
+    fixed). Vertex state is orders of magnitude smaller than the edge
+    set, so the materialization is cheap relative to the superstep's
+    edge shuffle. On a multi-node cluster, swap localCheckpoint for
+    reliable ``checkpoint()`` every ~5 supersteps (executor loss
+    safety). Loops with a per-superstep convergence probe checkpoint
+    eagerly (the probe is an action anyway). FIXED-iteration loops
+    (pagerank/ppr/labelprop) checkpoint intermediate steps LAZILY
+    (``eager=False``): lineage still truncates and the persisted RDD
+    still computes exactly once (both in-superstep consumers share
+    it), but the whole chain executes as ONE job at the final eager
+    step, saving a scheduled materialization job per superstep. The
+    final step stays eager so execution happens inside the scope.
     """
-    spark = edges.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    provisional = max(
-        4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-    )
-    conf.set("spark.sql.shuffle.partitions", str(provisional))
-    sym = None
-    try:
-        sym = symmetrize(edges, directed=directed).cache()
-        conf.set("spark.sql.shuffle.partitions", str(sym.rdd.getNumPartitions()))
-        yield sym
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        if sym is not None:
-            sym.unpersist()
+
+    def __init__(self, spark: SparkSession, divisor: int = 1):
+        self.spark = spark
+        self.divisor = divisor
+        self._caches: list[DataFrame] = []
+
+    def __enter__(self) -> LoopScope:
+        conf = self.spark.conf
+        self._prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
+        self._prev_part = conf.get("spark.sql.shuffle.partitions", "200")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        width = min(int(self._prev_part), self.spark.sparkContext.defaultParallelism)
+        self._pin(max(4, width // self.divisor))
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.spark.conf.set("spark.sql.adaptive.enabled", self._prev_aqe)
+        self.spark.conf.set("spark.sql.shuffle.partitions", self._prev_part)
+        for df in self._caches:
+            df.unpersist()
+
+    def _pin(self, n: int) -> None:
+        self.partitions = n
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, unpersisted when the scope exits."""
+        df = df.cache()
+        self._caches.append(df)
+        return df
+
+    def layout(self, df: DataFrame, *keys: str) -> DataFrame:
+        """The loop's resident edge layout, built once: ``df``
+        hash-partitioned by ``keys`` and cached for the whole loop.
+
+        A cached DataFrame advertises its partitioning, so every
+        superstep's ``edges ⨝ state ON src = id`` reuses it and
+        shuffles ONLY the small vertex-state side — the edge set (the
+        big side, shuffled once here) never moves again. This is the
+        in-memory equivalent of bucketing the edge table by src at
+        100 TB.
+
+        ``df`` is materialized ONCE (eager localCheckpoint) so the
+        sizing count and the repartition don't each recompute the
+        caller's lineage (a dedup, a coarsen chain). A localCheckpoint's
+        blocks are released by the ContextCleaner when the plan goes
+        unreachable, and the cache is dropped at scope exit, so memory
+        is bounded and every run pays its own materialization.
+
+        The width is sized to edge volume (~250k edge rows per task),
+        clamped to the provisional width, and pinned for the rest of
+        the loop: a superstep runs dozens of tiny stages, so
+        over-partitioning a small graph buys nothing and pays
+        task-scheduling overhead per superstep (measured ~2x on the
+        sf0.1 graph: 32 -> 8 partitions halves PageRank). At 100 TB
+        edge counts push this to the clamp, i.e. full cluster
+        parallelism.
+        """
+        df = df.localCheckpoint(eager=True)
+        self._pin(max(4, min(self.partitions, df.count() // 250_000 + 1)))
+        return self.cache(df.repartition(self.partitions, *keys))
 
 
 def symmetrize(edges: DataFrame, directed: bool = False) -> DataFrame:
-    """Undirected view of an edge list: both directions, deduped,
-    hash-partitioned by ``src``. ``directed=True`` skips the reverse
-    union (messages then flow along edge direction only — what a
-    generic ``pregel_run`` over a directed graph needs) but keeps the
-    dedup + src-partitioning that lets every superstep's message join
-    reuse the cached layout.
-
-    The explicit repartition matters for the superstep loop: a cached
-    DataFrame advertises its partitioning, so every superstep's
-    ``edges ⨝ state ON src = id`` reuses it and shuffles ONLY the small
-    vertex-state side — the edge set (the big side, shuffled once here)
-    never moves again. This is the in-memory equivalent of bucketing
-    the edge table by src at 100 TB.
+    """Undirected view of an edge list: both directions, deduped.
+    ``directed=True`` skips the reverse union (messages then flow along
+    edge direction only — what a generic ``pregel_run`` over a directed
+    graph needs) but keeps the dedup. Loops place the result with
+    ``LoopScope.layout(sym, "src")``.
     """
     if directed:
-        both = edges.select("src", "dst").distinct()
-    else:
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        both = edges.select("src", "dst").unionByName(rev).distinct()
-    # Materialize ONCE (r13: eager localCheckpoint, not .cache()) so
-    # the sizing count and the repartition don't each recompute the
-    # union+distinct. The earlier .cache() was never unpersisted
-    # (the VERDICT r12 #8 leak class): every pregel call left a
-    # resident edge relation in the CacheManager for the session's
-    # lifetime, and bench runs 2..N were silently served the distinct
-    # for free. A localCheckpoint's blocks are released by the
-    # ContextCleaner when the plan goes unreachable (loop exit), so
-    # memory is bounded and every run pays its own materialization.
-    both = both.localCheckpoint(eager=True)
-    # Partition count sized to edge volume (~250k edge rows per task),
-    # clamped to the session's shuffle parallelism: a superstep runs
-    # dozens of tiny stages, so over-partitioning a small graph buys
-    # nothing and pays task-scheduling overhead per superstep (measured
-    # ~2x on the sf0.1 graph: 32 -> 8 partitions halves PageRank).
-    # At 100 TB edge counts push this to the clamp, i.e. full cluster
-    # parallelism.
-    conf_part = int(both.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_part = max(4, min(conf_part, both.count() // 250_000 + 1))
-    return both.repartition(n_part, "src")
-
-
-def _truncate(df: DataFrame, step: int, eager: bool = True) -> DataFrame:
-    """Checkpoint the new vertex state EVERY superstep.
-
-    This does two jobs at once: truncates lineage (otherwise the plan
-    doubles per superstep — the GraphX-on-DataFrames hazard) and breaks
-    recompute (without it, the convergence check and the next superstep
-    each re-execute this superstep's shuffles, compounding ~3x per
-    iteration — measured 40s → 9s on the sf0.1 WCC when fixed). Vertex
-    state is orders of magnitude smaller than the edge set, so the
-    materialization is cheap relative to the superstep's edge shuffle.
-    On a multi-node cluster, swap localCheckpoint for reliable
-    ``checkpoint()`` every ~5 supersteps (executor loss safety).
-
-    ``eager``: algorithms with a per-superstep convergence probe
-    materialize every step anyway (the probe is an action). FIXED-
-    iteration algorithms (pagerank/ppr/labelprop) pass ``eager=False``
-    for intermediate steps — lineage still truncates and the persisted
-    RDD still computes exactly once (both in-superstep consumers share
-    it), but the whole chain executes as ONE job at the final eager
-    step, saving a scheduled materialization job per superstep. The
-    final step must stay eager so execution happens inside
-    ``_superstep_env``'s pinned settings.
-    """
-    return df.localCheckpoint(eager=eager)
+        return edges.select("src", "dst").distinct()
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return edges.select("src", "dst").unionByName(rev).distinct()
 
 
 def connected_components(
@@ -149,7 +173,8 @@ def connected_components(
     reachable. Converges in O(diameter) supersteps.
     """
     state = vertices.select("id", F.col("id").alias("component"))
-    with _superstep_env(edges) as sym:
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
         # Delta/frontier messaging (r12 optimization, guide §1.2 "remove
         # unnecessary shuffles and passes"): only vertices whose
         # component CHANGED last superstep need to re-broadcast it —
@@ -164,7 +189,7 @@ def connected_components(
         # RDD — the old probe joined new-vs-old state, a whole extra
         # shuffle job per superstep on data the update had already seen.
         frontier = state
-        for step in range(max_iter):
+        for _ in range(max_iter):
             msgs = (
                 sym.join(frontier, sym.src == frontier.id)
                 .groupBy(F.col("dst").alias("id"))
@@ -181,7 +206,7 @@ def connected_components(
                      ).alias("_chg"),
                 )
             )
-            new_state = _truncate(new_state, step)
+            new_state = new_state.localCheckpoint()
             frontier = new_state.filter("_chg").select("id", "component")
             state = new_state.select("id", "component")
             if frontier.isEmpty():
@@ -196,7 +221,8 @@ def bfs(
 
     Returns (id, dist) for reached vertices only, dist <= max_depth.
     """
-    with _superstep_env(edges) as sym:
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
         state = vertices.select(
             "id",
             F.when(F.col("id").isin(source_ids), F.lit(0)).alias("dist"),
@@ -219,8 +245,7 @@ def bfs(
             )
             state = state.select(
                 "id", F.when(F.col("d2") < 2**31, F.col("d2")).alias("dist")
-            )
-            state = _truncate(state, step)
+            ).localCheckpoint()
     return state.filter(F.col("dist").isNotNull())
 
 
@@ -238,7 +263,8 @@ def pagerank(
     """
     n = vertices.count()
     teleport = (1.0 - damping) / n
-    with _superstep_env(edges) as sym:
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
@@ -262,7 +288,7 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
-            state = _truncate(state, step, eager=(step == iterations - 1))
+            state = state.localCheckpoint(eager=(step == iterations - 1))
     return state.select("id", "rank")
 
 
@@ -285,12 +311,14 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     per-id work by #distinct neighbor values instead (star-fixture
     timings in SCALE.md §7).
     """
-    with _superstep_env(edges) as sym:
-        c = _truncate(
-            sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("c")),
-            0,
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
+        c = (
+            sym.groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).alias("c"))
+            .localCheckpoint()
         )
-        for step in range(max_iter):
+        for _ in range(max_iter):
             msgs = sym.join(c, sym.dst == c.id).select(sym.src.alias("id"), "c")
             hist = msgs.groupBy("id", "c").agg(F.count(F.lit(1)).alias("n"))
             acc0 = F.struct(
@@ -314,11 +342,11 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
                 hist.groupBy("id")
                 .agg(h_of.alias("h"))
             )
-            new_c = _truncate(
+            new_c = (
                 c.withColumnRenamed("c", "old")
                 .join(h, "id")
-                .select("id", F.least(F.col("old"), F.col("h")).alias("c"), "old"),
-                step,
+                .select("id", F.least(F.col("old"), F.col("h")).alias("c"), "old")
+                .localCheckpoint()
             )
             converged = new_c.filter(F.col("c") != F.col("old")).isEmpty()
             c = new_c.select("id", "c")
@@ -346,7 +374,8 @@ def label_propagation(
     timings in SCALE.md §7) and drops a whole sort stage per superstep.
     """
     state = vertices.select("id", F.col("id").alias("label"))
-    with _superstep_env(edges) as sym:
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
         for step in range(iterations):
             counts = (
                 sym.join(state, sym.src == state.id)
@@ -369,7 +398,7 @@ def label_propagation(
             state = state.join(winners, "id", "left").select(
                 "id", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
             )
-            state = _truncate(state, step, eager=(step == iterations - 1))
+            state = state.localCheckpoint(eager=(step == iterations - 1))
     return state
 
 
@@ -387,7 +416,8 @@ def personalized_pagerank(
     Returns (id, rank).
     """
     n_src = len(source_ids)
-    with _superstep_env(edges) as sym:
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
@@ -416,7 +446,7 @@ def personalized_pagerank(
                 ).alias("rank"),
                 "teleport",
             )
-            state = _truncate(state, step, eager=(step == iterations - 1))
+            state = state.localCheckpoint(eager=(step == iterations - 1))
     return state.select("id", "rank")
 
 
@@ -435,55 +465,26 @@ def shortest_paths_weighted(
     symmetrization is the caller's choice. Returns (id, dist) for
     reached vertices.
     """
-    spark = weighted_edges.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    e = None
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        # Pin provisionally BEFORE .cache(): CacheManager compiles the
-        # cached plan with the conf in force at registration (and
-        # cached plans are exempt from AQE re-partitioning), so caching
-        # first would bake session-default 200-partition shuffles into
-        # the edge build (measured: 400/800-task stages on a vanilla
-        # session).
-        provisional = max(
-            4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(provisional))
-        # r12 optimization: src-partitioned cached edges (only the
-        # frontier side shuffles per round) and a DELTA frontier —
-        # only vertices whose dist improved last round re-relax; a
-        # non-improved vertex's relaxations were already emitted with
-        # identical content and min-folded, so per-round states are
-        # bit-identical to the relax-all form (classic delta
-        # Bellman-Ford; oracle unchanged).
-        # r13 (ADVICE r12): materialize the projected edges ONCE
-        # before counting — the sizing count used to run on the
-        # un-checkpointed input lineage and the cache materialization
-        # re-ran it, computing a caller-supplied derived frame twice.
-        proj = weighted_edges.select("src", "dst", "w").localCheckpoint(eager=True)
-        n_sized = max(4, min(provisional, proj.count() // 250_000 + 1))
-        conf.set("spark.sql.shuffle.partitions", str(n_sized))
-        e = proj.repartition(n_sized, "src").cache()
-        state = _truncate(
-            vertices.select(
-                "id",
-                F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias(
-                    "dist"
-                ),
-            ),
-            0,
-        )
+    # r12 optimization: src-partitioned cached edges (only the
+    # frontier side shuffles per round) and a DELTA frontier — only
+    # vertices whose dist improved last round re-relax; a non-improved
+    # vertex's relaxations were already emitted with identical content
+    # and min-folded, so per-round states are bit-identical to the
+    # relax-all form (classic delta Bellman-Ford; oracle unchanged).
+    with LoopScope(weighted_edges.sparkSession) as scope:
+        e = scope.layout(weighted_edges.select("src", "dst", "w"), "src")
+        state = vertices.select(
+            "id",
+            F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias("dist"),
+        ).localCheckpoint()
         frontier = state.filter(F.col("dist").isNotNull())
-        for step in range(max_iter):
+        for _ in range(max_iter):
             msgs = (
                 e.join(frontier, e.src == frontier.id)
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min(F.col("dist") + F.col("w")).alias("msg"))
             )
-            new_state = _truncate(
+            new_state = (
                 state.withColumnRenamed("dist", "old")
                 .join(msgs, "id", "left")
                 .select(
@@ -498,8 +499,8 @@ def shortest_paths_weighted(
                     "id",
                     F.when(F.col("d2") < 2**62, F.col("d2")).alias("dist"),
                     "old",
-                ),
-                step,
+                )
+                .localCheckpoint()
             )
             frontier = new_state.filter(
                 F.col("dist").eqNullSafe(F.col("old")) == F.lit(False)
@@ -508,11 +509,6 @@ def shortest_paths_weighted(
             state = new_state.select("id", "dist")
             if converged:
                 break
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        if e is not None:
-            e.unpersist()
     return state.filter(F.col("dist").isNotNull())
 
 
@@ -540,36 +536,15 @@ def temporal_earliest_arrival(
     state equals the n_rounds state. Sources start at arrival 0
     (before every real timestamp). Returns (id, arr) for reached
     vertices."""
-    spark = contacts.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    e = None
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        provisional = max(
-            4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(provisional))
-        # r12 optimization: the contact cache is hash-partitioned by
-        # src at the loop's pinned partition count (the symmetrize()
-        # layout contract), so each round's message join shuffles ONLY
-        # the frontier side — the contact list never moves again.
-        # r13 (ADVICE r12): materialize the projected contacts ONCE
-        # before the sizing count (see shortest_paths_weighted).
-        proj = contacts.select("src", "dst", "t").localCheckpoint(eager=True)
-        n_sized = max(4, min(provisional, proj.count() // 250_000 + 1))
-        conf.set("spark.sql.shuffle.partitions", str(n_sized))
-        e = proj.repartition(n_sized, "src").cache()
-        state = _truncate(
-            vertices.select(
-                "id",
-                F.when(
-                    F.col("id").isin(source_ids), F.lit(0).cast("long")
-                ).alias("arr"),
-            ),
-            0,
-        )
+    # r12 optimization: the contact cache is hash-partitioned by src,
+    # so each round's message join shuffles ONLY the frontier side —
+    # the contact list never moves again.
+    with LoopScope(contacts.sparkSession) as scope:
+        e = scope.layout(contacts.select("src", "dst", "t"), "src")
+        state = vertices.select(
+            "id",
+            F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias("arr"),
+        ).localCheckpoint()
         # Delta relaxation (r12 optimization): only vertices whose
         # arrival IMPROVED last round re-relax their out-contacts.
         # A non-improved vertex's messages depend only on (arr,
@@ -581,14 +556,14 @@ def temporal_earliest_arrival(
         # unchanged unrolled-CTE oracle). The frontier shrinks as
         # arrivals settle instead of staying |reached|-sized.
         frontier = state.filter(F.col("arr").isNotNull())
-        for step in range(n_rounds):
+        for _ in range(n_rounds):
             msgs = (
                 e.join(frontier, e.src == frontier.id)
                 .filter(F.col("t") >= F.col("arr"))
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("t").alias("msg"))
             )
-            new_state = _truncate(
+            new_state = (
                 state.withColumnRenamed("arr", "old")
                 .join(msgs, "id", "left")
                 .select(
@@ -603,8 +578,8 @@ def temporal_earliest_arrival(
                     "id",
                     F.when(F.col("a2") < 2**62, F.col("a2")).alias("arr"),
                     "old",
-                ),
-                step,
+                )
+                .localCheckpoint()
             )
             frontier = new_state.filter(
                 (F.col("arr").eqNullSafe(F.col("old")) == F.lit(False))
@@ -613,11 +588,6 @@ def temporal_earliest_arrival(
             state = new_state.select("id", "arr")
             if converged:
                 break
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        if e is not None:
-            e.unpersist()
     return state.filter(F.col("arr").isNotNull())
 
 
@@ -651,7 +621,7 @@ def pregel_run(
     - ``check_cols``: converge (stop early) when these state columns
       are unchanged for every vertex — adds one tiny probe job per
       superstep; omit for fixed-iteration algorithms (lineage then
-      executes as ONE job at the final superstep, see ``_truncate``).
+      executes as ONE job at the final superstep, see ``LoopScope``).
 
     Scale posture identical to the named algorithms: edges cached
     src-partitioned once, only vertex state shuffles per superstep,
@@ -676,7 +646,8 @@ def pregel_run(
     if unknown:
         raise ValueError(f"update targets unknown state columns: {sorted(unknown)}")
     state = vertices.select("id", *state_cols)
-    with _superstep_env(edges, directed=directed) as sym:
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges, directed=directed), "src")
         for step in range(max_iter):
             msgs = (
                 sym.join(state, sym.src == state.id)
@@ -693,10 +664,8 @@ def pregel_run(
             )
             # convergence probing needs each step materialized; fixed-
             # iteration loops defer execution to the last eager step
-            new_state = _truncate(
-                new_state,
-                step,
-                eager=bool(check_cols) or step == max_iter - 1,
+            new_state = new_state.localCheckpoint(
+                eager=bool(check_cols) or step == max_iter - 1
             )
             if check_cols:
                 changed = (
@@ -755,11 +724,12 @@ def betweenness_sampled(
     spark = vertices.sparkSession
     roots = spark.createDataFrame([(int(s),) for s in sources], "root long")
     delta_frames: list[DataFrame] = []
-    with _superstep_env(edges) as sym:
-        lvl0 = _truncate(
+    with LoopScope(spark) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
+        lvl0 = (
             roots.join(vertices, roots.root == vertices.id)
-            .select("root", "id", F.lit(1).cast("long").alias("sigma")),
-            0,
+            .select("root", "id", F.lit(1).cast("long").alias("sigma"))
+            .localCheckpoint()
         )
         if lvl0.isEmpty():
             return vertices.select("id", F.lit(0.0).alias("betweenness"))
@@ -774,11 +744,11 @@ def betweenness_sampled(
                 .groupBy("root", "id")
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            nxt = _truncate(msgs, d)
+            nxt = msgs.localCheckpoint()
             if nxt.isEmpty():
                 break
             levels.append(nxt)
-            visited = _truncate(visited.unionByName(nxt.select("root", "id")), d)
+            visited = visited.unionByName(nxt.select("root", "id")).localCheckpoint()
         # backward dependency pass, deepest level first
         delta_d: DataFrame | None = None
         for d in range(len(levels) - 1, 0, -1):
@@ -807,7 +777,7 @@ def betweenness_sampled(
                     "root", "id", (F.col("sigma") * F.col("msum")).alias("delta")
                 )
             )
-            delta_d = _truncate(contrib, d)
+            delta_d = contrib.localCheckpoint()
             if d > 1:  # deltas FOR level d-1; level 0 is the root itself
                 delta_frames.append(delta_d.select("id", "delta"))
     if not delta_frames:
@@ -863,56 +833,46 @@ def hits(edges: DataFrame, iterations: int = 20) -> DataFrame:
     float-sum ordering is nondeterministic run to run as before —
     rows-only key, tolerance-pinned goldens).
     """
-    assert iterations >= 1, "hits needs at least one superstep"
-    with _superstep_env(edges, directed=True) as dir_edges:
-        n_part = dir_edges.rdd.getNumPartitions()
-        by_dst = dir_edges.repartition(n_part, "dst").cache()
-        try:
-            verts = (
-                dir_edges.select(F.col("src").alias("id"))
-                .unionByName(dir_edges.select(F.col("dst").alias("id")))
-                .distinct()
-                .localCheckpoint()
+    if iterations < 1:
+        raise ValueError("hits needs at least one superstep")
+    with LoopScope(edges.sparkSession) as scope:
+        dir_edges = scope.layout(symmetrize(edges, directed=True), "src")
+        by_dst = scope.cache(dir_edges.repartition(scope.partitions, "dst"))
+        verts = (
+            dir_edges.select(F.col("src").alias("id"))
+            .unionByName(dir_edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .localCheckpoint()
+        )
+        hub = verts.select("id", F.lit(1.0).alias("hub"))
+        auth = None
+        norm = F.coalesce(
+            F.when(F.col("t") != 0, F.col("raw") / F.col("t")), F.lit(0.0)
+        )
+        for _ in range(iterations):
+            araw = (
+                dir_edges.join(hub.select(F.col("id").alias("src"), "hub"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("hub").alias("raw"))
+                .localCheckpoint(eager=True)
             )
-            hub = verts.select("id", F.lit(1.0).alias("hub"))
-            auth = None
-            norm = F.coalesce(
-                F.when(F.col("t") != 0, F.col("raw") / F.col("t")), F.lit(0.0)
+            t_a = araw.agg(F.sum("raw").alias("t"))
+            auth = araw.crossJoin(F.broadcast(t_a)).select("id", norm.alias("auth"))
+            hraw = (
+                by_dst.join(auth.select(F.col("id").alias("dst"), "auth"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("auth").alias("raw"))
+                .localCheckpoint(eager=True)
             )
-            for _step in range(iterations):
-                araw = (
-                    dir_edges.join(
-                        hub.select(F.col("id").alias("src"), "hub"), "src"
-                    )
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.sum("hub").alias("raw"))
-                    .localCheckpoint(eager=True)
-                )
-                t_a = araw.agg(F.sum("raw").alias("t"))
-                auth = araw.crossJoin(F.broadcast(t_a)).select(
-                    "id", norm.alias("auth")
-                )
-                hraw = (
-                    by_dst.join(
-                        auth.select(F.col("id").alias("dst"), "auth"), "dst"
-                    )
-                    .groupBy(F.col("src").alias("id"))
-                    .agg(F.sum("auth").alias("raw"))
-                    .localCheckpoint(eager=True)
-                )
-                t_h = hraw.agg(F.sum("raw").alias("t"))
-                hub = hraw.crossJoin(F.broadcast(t_h)).select(
-                    "id", norm.alias("hub")
-                )
-            return (
-                verts.join(hub, "id", "left")
-                .join(auth, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                    F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
-                )
-                .localCheckpoint()
+            t_h = hraw.agg(F.sum("raw").alias("t"))
+            hub = hraw.crossJoin(F.broadcast(t_h)).select("id", norm.alias("hub"))
+        return (
+            verts.join(hub, "id", "left")
+            .join(auth, "id", "left")
+            .select(
+                "id",
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
             )
-        finally:
-            by_dst.unpersist()
+            .localCheckpoint()
+        )

@@ -14,8 +14,6 @@ lineage checkpointing.
 
 from __future__ import annotations
 
-from contextlib import contextmanager as _contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from ezbake_graph_spark.graph import (
     label_propagation,
     pagerank,
 )
+from ezbake_graph_spark.graph.pregel import LoopScope
 from ezbake_graph_spark.registry import register
 
 # Shared DuckDB CTEs for the bipartite graph in unified id space.
@@ -48,31 +47,6 @@ def bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.col("l_partkey")).alias("src"),
         (2 * F.col("l_suppkey") + 1).alias("dst"),
     ).distinct()
-
-
-@_contextmanager
-def _pinned_loop_env(spark: SparkSession):
-    """Scoped settings for the hand-rolled fixed-iteration integer
-    loops (exact PageRank/PPR), mirroring graph/pregel.py's
-    ``_superstep_env``: AQE off (nothing to re-plan in a fixed tiny
-    shuffle, and its per-stage planning jobs multiply across 10
-    supersteps), shuffle partitions pinned small (edge-volume scaled,
-    clamped to cluster parallelism at 100 TB). The loop must
-    MATERIALIZE its result (eager localCheckpoint) before the context
-    exits — execution after restore would run at session settings."""
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    prev_p = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(4, min(int(prev_p), spark.sparkContext.defaultParallelism) // 4)),
-    )
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_p)
 
 
 def graph_vertices(edges: DataFrame) -> DataFrame:
@@ -1052,10 +1026,11 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so no dangling-mass term is needed.
 
     Loop mechanics (round-5 tune, 6.3 s → 2.9 s first-run at sf0.01):
-    runs under ``_pinned_loop_env`` (AQE off + small pinned shuffle),
-    mid-loop checkpoints LAZY (lineage truncation without a
-    materialization job each — the whole 10-step chain executes as one
-    job at the closing eager checkpoint, inside the pinned env).
+    runs in a ``LoopScope(divisor=4)`` (AQE off + small pinned shuffle,
+    no sizing count), mid-loop checkpoints LAZY (lineage truncation
+    without a materialization job each — the whole 10-step chain
+    executes as one job at the closing eager checkpoint, inside the
+    scope).
 
     r12 optimization (guide §2.4 "two operations keyed the same way
     share one exchange"): the per-superstep ``state ⨝ deg`` join is
@@ -1067,33 +1042,25 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as graph/pregel.py ``symmetrize``). The per-edge share
     is the identical integer ``r div d``; results are bit-identical
     (same value-hash oracle)."""
-    with _pinned_loop_env(spark):
+    with LoopScope(spark, divisor=4) as scope:
         edges = bipartite_edges(spark, sf_dir)
         sym = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # Loop-scoped cache, unpersisted after the closing eager
-        # checkpoint (VERDICT r12 #8 / ADVICE r12: the r12 form was
-        # never unpersisted, so each distinct plan left a resident
-        # edge relation for the session's lifetime AND runs 2..N of a
-        # min-of-N bench were served the decorate+repartition for free
-        # by the CacheManager — honest per-run attribution requires
-        # every run to pay it). r13 build shape (guide §2.4 "share one
-        # exchange"): the degree is a count(*) WINDOW over the src
-        # partitioning the cache needs anyway — ONE exchange, vs the
-        # old deg-aggregate + join + repartition (three). Window per
-        # src = same per-task row placement the src layout already
-        # imposes; exact integer count, bit-identical ranks
-        # (same-session A/B: 3.66 → 3.22 s, rows equal).
-        sym_d = (
-            sym.repartition(n_part, "src")
-            .select(
+        # Loop-scoped cache (dropped at scope exit, so every run pays
+        # the decorate+repartition — VERDICT r12 #8). r13 build shape
+        # (guide §2.4 "share one exchange"): the degree is a count(*)
+        # WINDOW over the src partitioning the cache needs anyway — ONE
+        # exchange, vs the old deg-aggregate + join + repartition
+        # (three). Window per src = same per-task row placement the src
+        # layout already imposes; exact integer count, bit-identical
+        # ranks (same-session A/B: 3.66 → 3.22 s, rows equal).
+        sym_d = scope.cache(
+            sym.repartition(scope.partitions, "src").select(
                 "src",
                 "dst",
                 F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
             )
-            .cache()
         )
         state = (
             sym.select(F.col("src").alias("id")).distinct()
@@ -1116,11 +1083,9 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if i % 3 == 2:
                 state = state.localCheckpoint(eager=False)
-        out = state.select(
+        return state.select(
             "id", (F.col("r").cast("double") / 1_000_000).alias("rank")
         ).orderBy("id").localCheckpoint()
-        sym_d.unpersist()
-        return out
 
 
 def _ppr_exact_sql(seed: int = 1, iterations: int = 10) -> str:
@@ -1175,9 +1140,9 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring with a full value-hash oracle. Vertices never reached keep
     rank 0 and are filtered, mirroring sparse PPR at scale (frontier
     stays small; state ∝ touched vertices, not |V|). Same loop
-    mechanics as graph_pagerank_exact: pinned env, one-time deg
+    mechanics as graph_pagerank_exact: pinned scope, one-time deg
     checkpoint, lazy mid-loop checkpoints, eager closing checkpoint."""
-    with _pinned_loop_env(spark):
+    with LoopScope(spark, divisor=4) as scope:
         edges = bipartite_edges(spark, sf_dir)
         sym = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1185,19 +1150,15 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r12: degree folded onto the src-partitioned cached edge set —
         # one join per superstep instead of two, edge relation never
         # re-shuffled (same move as graph_pagerank_exact; shares are
-        # the identical integer r div d). r13: loop-scoped cache
-        # (unpersisted after the closing eager checkpoint, VERDICT r12
-        # #8) and the one-exchange window-count build — see
+        # the identical integer r div d). r13: loop-scoped cache and
+        # the one-exchange window-count build — see
         # graph_pagerank_exact.
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        sym_d = (
-            sym.repartition(n_part, "src")
-            .select(
+        sym_d = scope.cache(
+            sym.repartition(scope.partitions, "src").select(
                 "src",
                 "dst",
                 F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
             )
-            .cache()
         )
         verts = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
         state = verts.withColumn(
@@ -1223,14 +1184,12 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if i % 3 == 2:
                 state = state.localCheckpoint(eager=False)
-        out = (
+        return (
             state.filter(F.col("r") > 0)
             .select("id", (F.col("r").cast("double") / 1_000_000).alias("rank"))
             .orderBy(F.col("rank").desc(), "id")
             .localCheckpoint()
         )
-        sym_d.unpersist()
-        return out
 
 
 _WALK_STEPS = 4
@@ -2012,83 +1971,50 @@ def louvain_local_moves(
     a broadcast. BIGINT bound: m2*kic needs 2m * max_degree < 9.2e18
     — at larger products pre-scale degrees (chi2-style caveat).
     """
-    from pyspark.sql import Window
-
     # Weighted graphs use the same integer algebra: strength replaces
     # degree, sum(w) replaces count(*) — weights must be BIGINT (scale
     # rational weights first, micro-unit style).
     #
-    # Loop-scoped execution pin (the _superstep_env posture, inlined
-    # because symmetrize() would drop the weight column): AQE off and
-    # shuffle partitions sized to the edge volume for the WHOLE round
-    # loop — every round re-runs the same fixed small shuffles, so
-    # AQE's re-planning jobs and session-width reduce stages are pure
+    # One LoopScope for the WHOLE round loop (symmetrize() would drop
+    # the weight column, so the arcs are laid out directly): every
+    # round re-runs the same fixed small shuffles, so AQE's
+    # re-planning jobs and session-width reduce stages are pure
     # per-round overhead (measured 331 s -> 159 s on the 80-node
     # planted hierarchy test, 2x on the sf0.01 keys; identical integer
-    # trajectory, settings restored on exit). Edges cache
-    # dst-partitioned once so each round's kic join reuses the layout
-    # and only the small label frame shuffles.
-    spark = edges_sym.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_part = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    provisional = max(
-        4, min(int(prev_part), spark.sparkContext.defaultParallelism)
-    )
-    conf.set("spark.sql.shuffle.partitions", str(provisional))
-    ew = edges_sym.select(
-        "src",
-        "dst",
-        (
-            F.col(weight_col).cast("long")
-            if weight_col is not None
-            else F.lit(1).cast("long")
-        ).alias("_w"),
-    )
-    try:
-        # r13 (the ADVICE r12 pregel fix, applied here too): materialize
-        # the projected arcs ONCE before the sizing count — previously
-        # the count executed the caller's arc frame and the cache
-        # materialization re-executed it. For louvain_two_level's
-        # coarse level that frame is the whole coarsen chain (two label
-        # joins + agg over the raw edge list), so the double-compute
-        # was a full extra pass. The cache below is built over the
-        # checkpointed RDD, so its InMemoryRelation stats (and every
-        # in-loop join strategy) are the real materialized sizes.
-        ew = ew.localCheckpoint(eager=True)
-        n_part = max(4, min(provisional, ew.count() // 250_000 + 1))
-        conf.set("spark.sql.shuffle.partitions", str(n_part))
-        ew = ew.repartition(n_part, "dst").cache()
-        return _louvain_rounds(ew, rounds, schedule)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_part)
-        ew.unpersist()
+    # trajectory). Arcs cache dst-partitioned once so each round's kic
+    # join reuses the layout and only the small label frame shuffles;
+    # ``layout`` materializes them before counting, so a caller's arc
+    # frame (for louvain_two_level's coarse level, the whole coarsen
+    # chain) executes once.
+    weight = F.col(weight_col) if weight_col is not None else F.lit(1)
+    with LoopScope(edges_sym.sparkSession) as scope:
+        ew = scope.layout(
+            edges_sym.select("src", "dst", weight.cast("long").alias("_w")), "dst"
+        )
+        return _louvain_rounds(scope, ew, rounds, schedule)
 
 
-def _louvain_rounds(ew: DataFrame, rounds: int, schedule: str) -> DataFrame:
+def _louvain_rounds(
+    scope: LoopScope, ew: DataFrame, rounds: int, schedule: str
+) -> DataFrame:
     """The local-move round loop over a cached weighted arc frame —
-    body of ``louvain_local_moves`` (see its contract), split out so
-    the conf pin/restore wraps exactly the executed region."""
+    body of ``louvain_local_moves`` (see its contract)."""
     # r13 (guide §1.2, VERDICT r12 #6): ``deg`` and ``m2`` are loop
     # INVARIANTS, but as lazy frames they re-aggregated from the edge
     # cache on every reference — deg twice per round (community totals
     # + the gain join) and m2 once per round as a fresh
-    # BroadcastExchange build. Loop-scoped ``.cache()`` (unpersisted by
-    # the caller's finally via ``_louvain_caches``) computes each once;
+    # BroadcastExchange build. Loop-scoped caches (dropped at scope
+    # exit) compute each once;
     # cache — not localCheckpoint — because an ExistingRDD would reset
     # sizeInBytes to the default and knock the small deg relation out
     # of the per-round broadcast join (measured: the checkpoint form
     # REGRESSED graph_louvain 9.2 → 10.8 s at sf0.1). Values are exact
     # integer sums — bit-identical trajectory (same value-hash
     # oracles).
-    deg = (
-        ew.groupBy(F.col("src").alias("id"))
-        .agg(F.sum("_w").alias("deg"))
-        .cache()
+    deg = scope.cache(
+        ew.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("deg"))
     )
-    m2 = ew.agg(F.sum("_w").alias("m2")).cache()
+    m2 = scope.cache(ew.agg(F.sum("_w").alias("m2")))
     cm = deg.select("id", F.col("id").alias("label"))
     for r in range(rounds):
         tot = (
@@ -2189,11 +2115,6 @@ def _louvain_rounds(ew: DataFrame, rounds: int, schedule: str) -> DataFrame:
             )
         )
         cm = cm.localCheckpoint(eager=True)
-    # loop-scoped caches: the returned cm is materialized (eager
-    # checkpoint), so the invariants can be dropped here — bounded
-    # memory, honest per-run attribution (VERDICT r12 #8)
-    deg.unpersist()
-    m2.unpersist()
     return cm.select("id", F.col("label").alias("community"))
 
 
@@ -2803,18 +2724,15 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so only superstep 1's raw (n_parts * 1e6) binds: safe below ~9e12
     parts; pre-scale the init mass beyond that (chi2-style caveat).
     """
-    with _pinned_loop_env(spark):
+    with LoopScope(spark, divisor=4) as scope:
         edges = bipartite_edges(spark, sf_dir).localCheckpoint()
         # r13 (guide §2.4 / the pregel.hits posture): both half-step
         # joins co-locate against a resident layout — edges cached
         # src-partitioned AND dst-partitioned at the pinned count, so
-        # only the score side ever shuffles. Unpersisted on exit
-        # (VERDICT r12 #8): the result is materialized by the closing
-        # eager checkpoint, so every run pays the decorate cost
-        # honestly.
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        by_src = edges.repartition(n_part, "src").cache()
-        by_dst = edges.repartition(n_part, "dst").cache()
+        # only the score side ever shuffles. Dropped at scope exit
+        # (VERDICT r12 #8), so every run pays the decorate cost.
+        by_src = scope.cache(edges.repartition(scope.partitions, "src"))
+        by_dst = scope.cache(edges.repartition(scope.partitions, "dst"))
         verts = (
             edges.select(F.col("src").alias("id"))
             .unionByName(edges.select(F.col("dst").alias("id")))
@@ -2855,7 +2773,7 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hraw.crossJoin(F.broadcast(t_h))
                 .select("id", F.expr("(raw * 1000000) div t").alias("h"))
             )
-        out = (
+        return (
             verts.join(hub, "id", "left")
             .join(auth.withColumnRenamed("a", "a_"), "id", "left")
             .select(
@@ -2872,9 +2790,6 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id")
             .localCheckpoint()
         )
-        by_src.unpersist()
-        by_dst.unpersist()
-        return out
 
 
 # ---------------------------------------------------------------------------
@@ -3181,6 +3096,23 @@ def _truss_sql(rounds: int = _TRUSS_ROUNDS, k: int = _TRUSS_K) -> str:
     )
 
 
+def _truss_support(cur: DataFrame) -> DataFrame:
+    """(a, b, support): common-neighbor count of every edge of ``cur``
+    within ``cur`` — two keyed self-joins plus one agg."""
+    cur = cur.select("a", "b")
+    sym = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+        cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+    x = sym.select(F.col("u").alias("xa"), F.col("v").alias("wx"))
+    y = sym.select(F.col("u").alias("yb"), F.col("v").alias("wy"))
+    return (
+        cur.join(x, cur.a == x.xa)
+        .join(y, (cur.b == F.col("yb")) & (F.col("wy") == F.col("wx")))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("support"))
+    )
+
+
 @register(
     "graph_ktruss", oracle=_truss_sql(), tags=("J-extra", "pregel", "bench2")
 )
@@ -3241,68 +3173,30 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     edges = eall.filter(keep)
-    with _pinned_loop_env(spark):
+    with LoopScope(spark, divisor=4):
         cur = _checkpoint_reset_stats(edges)
         n_cur = cur.count()
-        sup = None
         for _ in range(_TRUSS_ROUNDS):
-            sym = cur.select(
-                F.col("a").alias("u"), F.col("b").alias("v")
-            ).unionByName(
-                cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-            )
-            x = sym.select(F.col("u").alias("xa"), F.col("v").alias("wx"))
-            y = sym.select(F.col("u").alias("yb"), F.col("v").alias("wy"))
-            sup = (
-                cur.join(x, cur.a == x.xa)
-                .join(y, (cur.b == F.col("yb")) & (F.col("wy") == F.col("wx")))
-                .groupBy("a", "b")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
             nxt = _checkpoint_reset_stats(
-                sup.filter(F.col("support") >= _TRUSS_K - 2).select("a", "b")
+                _truss_support(cur)
+                .filter(F.col("support") >= _TRUSS_K - 2)
+                .select("a", "b", "support")
             )
             n_nxt = nxt.count()
+            cur = nxt
             if n_nxt == n_cur:
-                converged = True
-                cur = nxt
+                # Converged: the round's input set C and its survivors
+                # nxt = {e in C : sup(e) >= k-2} have equal size, so
+                # nxt == C is the stable set and the support carried
+                # through its checkpoint is already the stable support.
+                # Emitting from the materialized frame reuses it
+                # instead of re-running the two triangle joins.
                 break
-            cur, n_cur = nxt, n_nxt
-        else:
-            converged = False
-        if converged:
-            # r13 (guide §1.2 "don't compute things twice"): on the
-            # convergence round, ``sup`` was computed over a set C with
-            # nxt = {e in C : sup(e) >= k-2} and |nxt| == |C| — so
-            # nxt == C IS the stable set and ``sup`` already holds its
-            # support. Re-running the two triangle joins just to decorate
-            # the output re-paid a full peeling round (~1/(depth+1) of
-            # the key). The filter below re-emits exactly the recompute's
-            # rows (oracle hash unchanged).
-            out = (
-                sup.filter(F.col("support") >= _TRUSS_K - 2)
-                .orderBy("a", "b")
-                .localCheckpoint(eager=True)
-            )
+            n_cur = n_nxt
         else:
             # rounds exhausted without a fixpoint (never on committed
-            # data: depth 2/17/4 vs the 24-round cap): the last sup was
-            # computed over the PRE-peel set, so the stable support must
-            # be recomputed over the final cur
-            sym = cur.select(
-                F.col("a").alias("u"), F.col("b").alias("v")
-            ).unionByName(
-                cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-            )
-            x = sym.select(F.col("u").alias("xa"), F.col("v").alias("wx"))
-            y = sym.select(F.col("u").alias("yb"), F.col("v").alias("wy"))
-            out = (
-                cur.join(x, cur.a == x.xa)
-                .join(y, (cur.b == F.col("yb")) & (F.col("wy") == F.col("wx")))
-                .groupBy("a", "b")
-                .agg(F.count(F.lit(1)).alias("support"))
-                .filter(F.col("support") >= _TRUSS_K - 2)
-                .orderBy("a", "b")
-                .localCheckpoint(eager=True)
-            )
-    return out
+            # data: depth 2/17/4 vs the 24-round cap): the carried
+            # support was computed over the PRE-peel set, so recompute
+            # it over the final cur
+            cur = _truss_support(cur).filter(F.col("support") >= _TRUSS_K - 2)
+        return cur.orderBy("a", "b").localCheckpoint(eager=True)

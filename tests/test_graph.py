@@ -1007,6 +1007,16 @@ def test_hits_exact_tracks_float_hits(spark):
         assert abs(r["auth_micro"] / 1e6 - fa) < 5e-5
 
 
+def test_hits_rejects_zero_iterations(spark):
+    """An explicit error, not an ``assert`` stripped under ``python -O``
+    that would let a ``None`` auth frame fail later in a join."""
+    from ezbake_graph_spark.graph.pregel import hits
+
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    with pytest.raises(ValueError, match="at least one superstep"):
+        hits(edges, iterations=0)
+
+
 def test_incremental_components_bridge_and_new_nodes(spark):
     """A batch node chain that bridges two existing components must
     merge them to the global min label; untouched components keep

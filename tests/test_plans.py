@@ -370,6 +370,26 @@ def test_star_join_runs_five_jobs_cached(spark):
     assert len(jobs) <= 5, f"{len(jobs)} jobs: {sorted(jobs)}"
 
 
+# Jobs one warm call schedules at sf0.001, measured before the graph
+# loops moved onto LoopScope (the same at 4 and 32 cores). A lifecycle
+# change that adds a sizing count, a materialization or an extra probe
+# per superstep shows up here before it shows up in wall time.
+_LOOP_JOBS = {"graph_wcc": 15, "graph_pagerank_exact": 12, "graph_hits_exact": 41}
+
+
+@pytest.mark.parametrize("key", sorted(_LOOP_JOBS))
+def test_graph_loop_job_count_pinned(spark, key):
+    from tests.conftest import SF_SMOKE
+
+    fn = registry.queries()[key]
+    fn(spark, SF_SMOKE).collect()  # warm the table cache
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    fn(spark, SF_SMOKE).collect()
+    jobs = [j for j in st.getJobIdsForGroup(None) if j not in before]
+    assert len(jobs) <= _LOOP_JOBS[key], f"{key}: {len(jobs)} jobs"
+
+
 def test_time_travel_v2_sees_update_and_insert_v1_does_not(spark, duck, no_cache):
     """Snapshot isolation: after the v2 commit (rewrite B with bumped
     prices + append C), reading v1 via its manifest returns the

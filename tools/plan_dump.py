@@ -1,10 +1,10 @@
 """Dump full ``explain("formatted")`` output per bench/tier-2 key to
-``plans/r13/<key>_<label>.txt`` — the optimization round's before/after
-plan evidence (the judge checks plan claims against these files).
+``plans/r<N>/<key>_<label>.txt`` — an optimization round's before/after
+plan evidence (plan claims are checked against these files).
 
 Usage:
-    python tools/plan_dump_r13.py before [key ...]
-    python tools/plan_dump_r13.py after  [key ...]
+    python tools/plan_dump.py --round N before [key ...]
+    python tools/plan_dump.py --round N after  [key ...]
 
 Default key set: every ``bench`` + ``bench2`` key. Plans are captured
 at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1 — the driver's bench scale)
@@ -14,6 +14,7 @@ AFTER one execution so the AQE final plan is what ``explain`` prints.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -25,31 +26,35 @@ from ezbake_graph_spark import registry  # noqa: E402
 from ezbake_graph_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
+PLANS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
 )
 
 
 def main() -> None:
-    label = sys.argv[1] if len(sys.argv) > 1 else "before"
-    want = sys.argv[2:]
-    spark = get_session("plan-dump-r13")
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True, help="optimization round N")
+    ap.add_argument("label", nargs="?", default="before")
+    ap.add_argument("keys", nargs="*")
+    args = ap.parse_args()
+    out_dir = os.path.join(PLANS_DIR, f"r{args.round}")
+    spark = get_session(f"plan-dump-r{args.round}")
     qs = registry.queries()
-    keys = want or sorted(
+    keys = args.keys or sorted(
         k
         for k, s in registry.REGISTRY.items()
         if "bench" in s.tags or "bench2" in s.tags
     )
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for key in keys:
         df = qs[key](spark, SF_DIR)
         df.write.mode("overwrite").format("noop").save()  # AQE final plan
         formatted = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(OUT_DIR, f"{key}_{label}.txt")
+        path = os.path.join(out_dir, f"{key}_{args.label}.txt")
         with open(path, "w") as f:
-            f.write(f"# {key} @ {SF_DIR} ({label})\n\n")
+            f.write(f"# {key} @ {SF_DIR} ({args.label})\n\n")
             f.write(formatted)
         print(f"wrote {path}")
 
