@@ -43,7 +43,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ezbake_graph_spark import registry
-from ezbake_graph_spark.session import DEFAULT_SF_DIR, get_session
+from ezbake_graph_spark.session import DEFAULT_SF_DIR, codegen_compiles, get_session
 
 # min-of-N per pass; two passes -> up to 2N samples feed each reported
 # min. Run-to-run spread on this machine is ~±15% per query (GC bursts,
@@ -172,12 +172,15 @@ def _timed_pass(qs, keys: list[str], sf_dir: str, runs: int) -> dict[str, float]
     """One back-to-back min-of-``runs`` sweep over ``keys``.
 
     Back-to-back runs per query, NOT round-robin: measured on this
-    machine, interleaving the queries makes EVERY timed run pay a
-    ~0.1-0.3s query-switch penalty (JIT inline caches / codegen and
-    instruction-cache locality reset on each switch — bench total
-    5.55s interleaved vs 3.98s back-to-back, reproducibly). Run
-    back-to-back, the switch cost lands on run 1 only and min-of-N
-    discards it.
+    machine, interleaving the queries made EVERY timed run pay a
+    ~0.1-0.3s query-switch penalty (bench total 5.55s interleaved vs
+    3.98s back-to-back, reproducibly). The cause was Spark's generated-
+    class cache, capped at 100 entries by default: a cycle over the
+    keys needs more distinct classes than that, so each switch evicted
+    and recompiled every class (11-15 ms each, read from Spark's
+    CodegenMetrics). session.get_session now sizes the cap to the
+    working set; back-to-back stays the protocol, so the switch cost
+    that remains lands on run 1 only and min-of-N discards it.
     """
     sink = _sink_keys()
     out: dict[str, float] = {}
@@ -212,11 +215,14 @@ def main() -> None:
     keys = bench_keys()
     t2keys = [k for k in tier2_keys() if k in qs]
     # Global untimed warmup over every timed query before any timing.
-    # One pass per-query is not enough — the JVM C2 JIT and
-    # whole-stage-codegen caches keep improving across the first ~full
-    # suite, so queries timed early would pay compilation cost that says
-    # nothing about the plan (measured: Q1 0.95s when timed second in the
-    # suite vs 0.31s after a full pass).
+    # One pass per-query is not enough — the JVM C2 JIT keeps improving
+    # across the first ~full suite, and the first pass compiles every
+    # query's whole-stage-codegen classes, so queries timed early would
+    # pay compilation cost that says nothing about the plan (measured:
+    # Q1 0.95s when timed second in the suite vs 0.31s after a full
+    # pass). The compiled classes stay cached only because the session
+    # sizes spark.sql.codegen.cache.maxEntries to the suite; at the
+    # default cap of 100 later passes recompiled them all.
     sink = _sink_keys()
     for i in range(WARMUP):
         for key in keys:
@@ -239,10 +245,13 @@ def main() -> None:
                     df.toPandas()
     # Two separated timing passes; report the per-query min across both.
     passes = []
+    compiles = {"headline": []}
     for p in range(PASSES):
         if p:
             time.sleep(PASS_GAP_SEC)
+        c0 = codegen_compiles(spark)
         passes.append(_timed_pass(qs, keys, sf_dir, RUNS))
+        compiles["headline"].append(codegen_compiles(spark) - c0)
         print(
             f"# pass {p + 1}: total "
             f"{sum(passes[-1].values()):.3f}s loadavg {os.getloadavg()[0]:.2f}",
@@ -255,7 +264,9 @@ def main() -> None:
     # the r10 driver artifact's tier-2 block ran 3-6x slow under load
     # that arrived in between (VERDICT r10 #3)
     gate_t2 = _wait_quiet("tier2")
+    c0 = codegen_compiles(spark)
     t2 = {k: round(v, 4) for k, v in _timed_pass(qs, t2keys, sf_dir, RUNS2).items()}
+    compiles["tier2"] = codegen_compiles(spark) - c0
     for key in t2keys:
         print(f"# tier2 {key}: {t2[key]:.3f}s", file=sys.stderr)
     # Cached-table sweep: same headline keys with memory-resident
@@ -274,7 +285,9 @@ def main() -> None:
     cached = [_tables.load(spark_ref[0], sf_dir, t).cache() for t in _tables.TABLES]
     for df in cached:
         df.count()  # materialize
+    c0 = codegen_compiles(spark)
     tc = {k: round(v, 4) for k, v in _timed_pass(qs, keys, sf_dir, RUNS_CACHED).items()}
+    compiles["cached"] = codegen_compiles(spark) - c0
     for key in keys:
         print(f"# cached {key}: {tc[key]:.3f}s", file=sys.stderr)
     for df in cached:
@@ -324,6 +337,9 @@ def main() -> None:
         # scan-free reading (VERDICT r6 item 3): same keys, inputs cached
         "queries_cached": tc,
         "cached_total_sec": round(sum(tc.values()), 4),
+        # generated classes compiled per timed sweep (headline: one
+        # count per pass); ~0 when the codegen cache holds the suite
+        "codegen_compiles": compiles,
     }
     # VERDICT r11 "what's wrong" #1: the driver keeps only the last
     # ~2000 bytes of bench stdout, and the full payload (27 tier-2 keys

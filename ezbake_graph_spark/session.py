@@ -57,6 +57,21 @@ def get_session(app_name: str = "ezbake-graph-spark") -> SparkSession:
         # (S3/GCS) at the 100 TB design point. Waiting the 3s default
         # per locality level only delays task launch.
         .config("spark.locality.wait", "0")
+        # Whole-stage codegen keeps its compiled classes in one cache
+        # per JVM, capped by this STATIC conf: it is read once per JVM,
+        # so it must be set here in the builder (a runtime
+        # spark.conf.set raises CANNOT_MODIFY_STATIC_CONFIG). The
+        # default cap of 100 is below one warm pass's distinct classes
+        # (graph-iterative 145: graph_wcc 52, graph_pagerank_exact 38,
+        # graph_hits_exact 55; interactive-sql ~152), and a pass visits
+        # its ops in a cycle, so every class was evicted before its
+        # next use and every warm call recompiled everything (11-15 ms
+        # a class). The largest working set run in one process is
+        # bench.py's 45 timed keys cycled at sf0.001, ~1430 classes:
+        # per warm 45-key cycle, 2055 compiles at cap 100, 1240 at
+        # 1000, 40-62 at 4000, with driver peak RSS 4.23 -> 3.36 GB and
+        # Metaspace flat (~200 MB).
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
     )
     # Ad-hoc overrides for experiments: "k=v;k2=v2".
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
@@ -70,3 +85,11 @@ def get_session(app_name: str = "ezbake-graph-spark") -> SparkSession:
     # Checkpoint dir for iterative (Pregel) lineage truncation.
     spark.sparkContext.setCheckpointDir("/tmp/ezgs-checkpoints")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes whole-stage codegen has compiled in this JVM so far
+    (Spark's ``CodegenMetrics`` compilation-time histogram count)."""
+    pkg = spark._jvm.org.apache.spark.metrics.source
+    metrics = getattr(getattr(pkg, "CodegenMetrics$"), "MODULE$")
+    return metrics.METRIC_COMPILATION_TIME().getCount()

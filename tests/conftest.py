@@ -14,8 +14,19 @@ from ezbake_graph_spark.tables import TABLES
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def _machine_heap() -> str:
+    """The session's 24g heap, capped at half the machine's RAM: the
+    JVM grows its heap lazily toward the cap, so on a 16 GB machine a
+    24g cap let the one test JVM reach 10.5-14.8 GB RSS and be killed."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{min(24 * 1024, kb // 2 // 1024)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        os.environ["SPARK_GRAFT_DRIVER_MEM"] = _machine_heap()
     return get_session("ezgs-tests")
 
 

@@ -77,6 +77,23 @@ def test_minhash_plan_single_array_intersect(spark):
     assert plan.count("array_intersect") == 1, plan
 
 
+def test_exact_jaccard_plan_single_array_intersect(spark):
+    """The same barrier at the second site: exact_jaccard_pairs'
+    verify must evaluate array_intersect once per candidate, not once
+    more in a threshold filter pushed into the join."""
+    from ezbake_graph_spark import tables
+    from ezbake_graph_spark.operators.llm_dedup import PREFIX_SLICE, exact_jaccard_pairs
+
+    docs = tables.load(spark, SF_SMOKE, "documents").filter(
+        F.col("doc_id") < PREFIX_SLICE
+    )
+    df = exact_jaccard_pairs(docs)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert plan.count("array_intersect") == 1, plan
+
+
 def test_louvain_struct_max_matches_window_argmax(spark):
     """The r13 struct-max winner selection must pick the identical row
     as the old row_number window (desc score, asc cand) — exercised on
