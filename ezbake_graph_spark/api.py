@@ -70,7 +70,10 @@ from ezbake_graph_spark.graph.pregel import (  # noqa: F401  (re-exports)
     shortest_paths_weighted,
 )
 from ezbake_graph_spark.operators.joins import pit_join  # noqa: F401
-from ezbake_graph_spark.operators.llm_dedup import semdedup  # noqa: F401
+from ezbake_graph_spark.operators.llm_dedup import (  # noqa: F401
+    _clusters_from_pairs,
+    semdedup,
+)
 from ezbake_graph_spark.operators.analytics import km_survival  # noqa: F401
 from ezbake_graph_spark.operators.llm_similarity import (  # noqa: F401
     mmr_select,
@@ -1517,26 +1520,6 @@ def near_dup_clusters(
         docs, id_col, text_col, threshold, broadcast_ok
     ).select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
     return _clusters_from_pairs(docs, pairs, id_col, max_iter)
-
-
-def _clusters_from_pairs(
-    docs: DataFrame, pairs: DataFrame, id_col: str, max_iter: int = 30
-) -> DataFrame:
-    """Shared cluster-canonicalization tail of the dedup family: pair
-    graph (src, dst) -> Pregel connected components -> min-id
-    canonical representative. Returns (<id_col>, canonical_<id_col>,
-    cluster_size, is_canonical) for every input document."""
-    from ezbake_graph_spark.graph.pregel import connected_components
-
-    verts = docs.select(F.col(id_col).alias("id")).distinct()
-    comp = connected_components(verts, pairs, max_iter=max_iter).select(
-        F.col("id").alias(id_col),
-        F.col("component").alias(f"canonical_{id_col}"),
-    )
-    w = Window.partitionBy(f"canonical_{id_col}")
-    return comp.withColumn("cluster_size", F.count(F.lit(1)).over(w)).withColumn(
-        "is_canonical", F.col(id_col) == F.col(f"canonical_{id_col}")
-    )
 
 
 def repetition_stats(

@@ -5,28 +5,27 @@ BSP semantics per the Pregel/GraphX model [P]: each superstep is
   state    = state ⨝ messages → vertex update
 with driver-side iteration control (SURVEY.md §3.4).
 
-Scale design — every loop runs inside one ``LoopScope``:
-- Vertex state is ``localCheckpoint``-ed every superstep — truncates
-  lineage (else the plan doubles per superstep, the
-  GraphX-on-DataFrames hazard [P]) AND breaks recompute (eager versus
-  lazy: see ``LoopScope``).
-- Edges are symmetrized (``symmetrize``), partitioned by src and cached
-  ONCE (``LoopScope.layout``); each superstep's message join reuses
-  that partitioning, so only the small vertex-state side shuffles.
-- The partition count adapts to edge volume (``LoopScope.layout``); AQE
-  is off and shuffle partitions are pinned for the whole loop — both
-  cut fixed per-superstep scheduling overhead, the dominant cost for
-  small supersteps. The scope restores the conf and drops its caches
-  on exit, also when a superstep raises.
-- Convergence checks are tiny jobs (``isEmpty`` over the checkpointed
-  state), run each superstep; fixed-iteration algorithms skip them.
+Scale design — every loop runs inside one ``LoopScope``, which pins
+AQE off and the shuffle width for the loop, keeps the symmetrized edges
+src-partitioned and cached ONCE (only the small vertex-state side
+shuffles per superstep), and restores the conf and drops its caches on
+exit, also when a superstep raises. Vertex state is
+``localCheckpoint``-ed every superstep (lineage truncation and no
+recompute; eager versus lazy: see ``LoopScope``).
+- One superstep body per loop family: the label-correcting loops
+  (WCC, BFS, weighted SSSP, temporal earliest arrival) are one delta
+  min-relaxation, ``_relax_min``; PageRank and personalized PageRank
+  are one walk, ``_rank_walk``.
+- Convergence is a flag-in-state probe: the superstep's own ``select``
+  writes a ``_chg`` column into the checkpointed state, and the check
+  is a tiny ``filter("_chg").isEmpty()`` scan of it, never a new⨝old
+  join (``_relax_min``, ``pregel_run``); fixed-iteration algorithms
+  skip it.
 """
 
 from __future__ import annotations
 
-import functools
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -163,6 +162,61 @@ def symmetrize(edges: DataFrame, directed: bool = False) -> DataFrame:
     return edges.select("src", "dst").unionByName(rev).distinct()
 
 
+def _relax_min(
+    edges: DataFrame,
+    state: DataFrame,
+    frontier: DataFrame,
+    col: str,
+    msg: Column,
+    max_iter: int,
+    edge_filter: Column | None = None,
+) -> DataFrame:
+    """The delta min-relaxation superstep every label-correcting loop
+    runs (WCC, BFS, weighted SSSP, temporal earliest arrival)::
+
+        msgs  = (edges ⨝ frontier ON src = id)[edge_filter]
+                    .groupBy(dst).min(msg)
+        state = least(state.col, msgs.msg)       -- least skips NULLs
+
+    ``state`` is (id, ``col``) with NULL for "not reached"; ``edges``
+    is the loop's src-partitioned layout; ``msg`` and ``edge_filter``
+    are evaluated on the edges⨝frontier frame. Stops after
+    ``max_iter`` supersteps or when no value changed. Returns (id,
+    ``col``).
+
+    Delta frontier: only vertices whose value CHANGED last superstep
+    re-send. Min-combined messages are idempotent, and an unchanged
+    vertex's messages (a function of its value and its out-edges only)
+    were already sent and folded in the superstep after it last
+    changed, so dropping the re-sends reaches the identical state in
+    every superstep — the relax-all (Jacobi) form's state, in the
+    identical number of supersteps (pinned by tests/test_graph.py and
+    the loop keys' oracles). The message join shrinks as values settle
+    instead of staying |V|-sized.
+
+    The change flag ``~new.eqNullSafe(old)`` rides inside the eagerly
+    checkpointed state, so the convergence probe is a scan of the
+    materialized RDD, not a new⨝old join (an extra shuffle job per
+    superstep on data the update had already seen).
+    """
+    for _ in range(max_iter):
+        sent = edges.join(frontier, edges.src == frontier.id)
+        if edge_filter is not None:
+            sent = sent.filter(edge_filter)
+        msgs = sent.groupBy(F.col("dst").alias("id")).agg(F.min(msg).alias("msg"))
+        new = F.least(F.col(col), F.col("msg"))
+        new_state = (
+            state.join(msgs, "id", "left")
+            .select("id", new.alias(col), (~new.eqNullSafe(F.col(col))).alias("_chg"))
+            .localCheckpoint()
+        )
+        frontier = new_state.filter("_chg").select("id", col)
+        state = new_state.select("id", col)
+        if frontier.isEmpty():
+            break
+    return state
+
+
 def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iter: int = 30
 ) -> DataFrame:
@@ -175,43 +229,7 @@ def connected_components(
     state = vertices.select("id", F.col("id").alias("component"))
     with LoopScope(edges.sparkSession) as scope:
         sym = scope.layout(symmetrize(edges), "src")
-        # Delta/frontier messaging (r12 optimization, guide §1.2 "remove
-        # unnecessary shuffles and passes"): only vertices whose
-        # component CHANGED last superstep need to re-broadcast it —
-        # min-combined messages are idempotent, and an unchanged
-        # vertex's value was already sent (and folded in) the superstep
-        # after it last changed, so dropping the re-sends reaches the
-        # identical fixpoint in the identical number of supersteps
-        # (equivalence pinned by tests/test_graph.py). The message join
-        # shrinks geometrically as components settle instead of staying
-        # |V|-sized. The change flag rides INSIDE the checkpointed
-        # state, so the convergence probe is a scan of the materialized
-        # RDD — the old probe joined new-vs-old state, a whole extra
-        # shuffle job per superstep on data the update had already seen.
-        frontier = state
-        for _ in range(max_iter):
-            msgs = (
-                sym.join(frontier, sym.src == frontier.id)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("component").alias("msg"))
-            )
-            new_state = (
-                state.join(msgs, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("msg"), F.col("component"))
-                    ).alias("component"),
-                    (F.coalesce(F.col("msg"), F.col("component")) < F.col("component")
-                     ).alias("_chg"),
-                )
-            )
-            new_state = new_state.localCheckpoint()
-            frontier = new_state.filter("_chg").select("id", "component")
-            state = new_state.select("id", "component")
-            if frontier.isEmpty():
-                break
-    return state
+        return _relax_min(sym, state, state, "component", F.col("component"), max_iter)
 
 
 def bfs(
@@ -221,32 +239,59 @@ def bfs(
 
     Returns (id, dist) for reached vertices only, dist <= max_depth.
     """
+    state = vertices.select(
+        "id",
+        F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias("dist"),
+    )
     with LoopScope(edges.sparkSession) as scope:
         sym = scope.layout(symmetrize(edges), "src")
-        state = vertices.select(
-            "id",
-            F.when(F.col("id").isin(source_ids), F.lit(0)).alias("dist"),
+        state = _relax_min(
+            sym, state, state.filter(F.col("dist").isNotNull()), "dist",
+            F.col("dist") + 1, max_depth,
         )
-        for step in range(max_depth):
-            frontier = state.filter(F.col("dist") == step)
-            if frontier.isEmpty():
-                break
-            msgs = (
-                sym.join(frontier, sym.src == frontier.id)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col("dist") + 1).alias("msg"))
-            )
-            state = state.join(msgs, "id", "left").select(
-                "id",
-                F.least(
-                    F.coalesce(F.col("dist"), F.lit(2**31)),
-                    F.coalesce(F.col("msg"), F.lit(2**31)),
-                ).alias("d2"),
-            )
-            state = state.select(
-                "id", F.when(F.col("d2") < 2**31, F.col("d2")).alias("dist")
-            ).localCheckpoint()
     return state.filter(F.col("dist").isNotNull())
+
+
+def _rank_walk(
+    vertices: DataFrame,
+    edges: DataFrame,
+    rank0: Column,
+    teleport: Column,
+    iterations: int,
+    damping: float,
+) -> DataFrame:
+    """The PageRank superstep, fixed ``iterations`` on the symmetrized
+    graph: rank' = teleport + damping · Σ rank(src)/deg(src). ``rank0``
+    and ``teleport`` are per-vertex Columns over ``id``. Dangling
+    vertices (degree 0) send nothing and keep the teleport mass only.
+    Returns (id, rank)."""
+    with LoopScope(edges.sparkSession) as scope:
+        sym = scope.layout(symmetrize(edges), "src")
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("deg")
+        )
+        state = vertices.join(deg, "id", "left").select(
+            "id",
+            F.coalesce(F.col("deg"), F.lit(0)).alias("deg"),
+            rank0.alias("rank"),
+        )
+        for step in range(iterations):
+            contribs = (
+                sym.join(state, sym.src == state.id)
+                .filter(F.col("deg") > 0)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
+            )
+            state = state.join(contribs, "id", "left").select(
+                "id",
+                "deg",
+                (
+                    teleport
+                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                ).alias("rank"),
+            )
+            state = state.localCheckpoint(eager=(step == iterations - 1))
+    return state.select("id", "rank")
 
 
 def pagerank(
@@ -262,34 +307,9 @@ def pagerank(
     correctness; ranks are comparable after round().
     """
     n = vertices.count()
-    teleport = (1.0 - damping) / n
-    with LoopScope(edges.sparkSession) as scope:
-        sym = scope.layout(symmetrize(edges), "src")
-        deg = sym.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        state = vertices.join(deg, "id", "left").select(
-            "id",
-            F.coalesce(F.col("deg"), F.lit(0)).alias("deg"),
-            F.lit(1.0 / n).alias("rank"),
-        )
-        for step in range(iterations):
-            contribs = (
-                sym.join(state, sym.src == state.id)
-                .filter(F.col("deg") > 0)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            )
-            state = state.join(contribs, "id", "left").select(
-                "id",
-                "deg",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            state = state.localCheckpoint(eager=(step == iterations - 1))
-    return state.select("id", "rank")
+    return _rank_walk(
+        vertices, edges, F.lit(1.0 / n), F.lit((1.0 - damping) / n), iterations, damping
+    )
 
 
 def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
@@ -338,10 +358,7 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
                 ),
                 lambda acc: acc.getField("best"),
             )
-            h = (
-                hist.groupBy("id")
-                .agg(h_of.alias("h"))
-            )
+            h = hist.groupBy("id").agg(h_of.alias("h"))
             new_c = (
                 c.withColumnRenamed("c", "old")
                 .join(h, "id")
@@ -415,39 +432,12 @@ def personalized_pagerank(
     is the teleport term (constant per vertex, nonzero only on seeds).
     Returns (id, rank).
     """
-    n_src = len(source_ids)
-    with LoopScope(edges.sparkSession) as scope:
-        sym = scope.layout(symmetrize(edges), "src")
-        deg = sym.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        seed_rank = F.when(
-            F.col("id").isin(source_ids), F.lit(1.0 / n_src)
-        ).otherwise(F.lit(0.0))
-        state = vertices.join(deg, "id", "left").select(
-            "id",
-            F.coalesce(F.col("deg"), F.lit(0)).alias("deg"),
-            seed_rank.alias("rank"),
-            seed_rank.alias("teleport"),
-        )
-        for step in range(iterations):
-            contribs = (
-                sym.join(state, sym.src == state.id)
-                .filter(F.col("deg") > 0)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            )
-            state = state.join(contribs, "id", "left").select(
-                "id",
-                "deg",
-                (
-                    (1.0 - damping) * F.col("teleport")
-                    + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-                "teleport",
-            )
-            state = state.localCheckpoint(eager=(step == iterations - 1))
-    return state.select("id", "rank")
+    seed = F.when(
+        F.col("id").isin(source_ids), F.lit(1.0 / len(source_ids))
+    ).otherwise(F.lit(0.0))
+    return _rank_walk(
+        vertices, edges, seed, (1.0 - damping) * seed, iterations, damping
+    )
 
 
 def shortest_paths_weighted(
@@ -465,50 +455,16 @@ def shortest_paths_weighted(
     symmetrization is the caller's choice. Returns (id, dist) for
     reached vertices.
     """
-    # r12 optimization: src-partitioned cached edges (only the
-    # frontier side shuffles per round) and a DELTA frontier — only
-    # vertices whose dist improved last round re-relax; a non-improved
-    # vertex's relaxations were already emitted with identical content
-    # and min-folded, so per-round states are bit-identical to the
-    # relax-all form (classic delta Bellman-Ford; oracle unchanged).
     with LoopScope(weighted_edges.sparkSession) as scope:
         e = scope.layout(weighted_edges.select("src", "dst", "w"), "src")
         state = vertices.select(
             "id",
             F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias("dist"),
         ).localCheckpoint()
-        frontier = state.filter(F.col("dist").isNotNull())
-        for _ in range(max_iter):
-            msgs = (
-                e.join(frontier, e.src == frontier.id)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("msg"))
-            )
-            new_state = (
-                state.withColumnRenamed("dist", "old")
-                .join(msgs, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce(F.col("old"), F.lit(2**62)),
-                        F.coalesce(F.col("msg"), F.lit(2**62)),
-                    ).alias("d2"),
-                    "old",
-                )
-                .select(
-                    "id",
-                    F.when(F.col("d2") < 2**62, F.col("d2")).alias("dist"),
-                    "old",
-                )
-                .localCheckpoint()
-            )
-            frontier = new_state.filter(
-                F.col("dist").eqNullSafe(F.col("old")) == F.lit(False)
-            ).select("id", "dist")
-            converged = frontier.isEmpty()
-            state = new_state.select("id", "dist")
-            if converged:
-                break
+        state = _relax_min(
+            e, state, state.filter(F.col("dist").isNotNull()), "dist",
+            F.col("dist") + F.col("w"), max_iter,
+        )
     return state.filter(F.col("dist").isNotNull())
 
 
@@ -536,58 +492,16 @@ def temporal_earliest_arrival(
     state equals the n_rounds state. Sources start at arrival 0
     (before every real timestamp). Returns (id, arr) for reached
     vertices."""
-    # r12 optimization: the contact cache is hash-partitioned by src,
-    # so each round's message join shuffles ONLY the frontier side —
-    # the contact list never moves again.
     with LoopScope(contacts.sparkSession) as scope:
         e = scope.layout(contacts.select("src", "dst", "t"), "src")
         state = vertices.select(
             "id",
             F.when(F.col("id").isin(source_ids), F.lit(0).cast("long")).alias("arr"),
         ).localCheckpoint()
-        # Delta relaxation (r12 optimization): only vertices whose
-        # arrival IMPROVED last round re-relax their out-contacts.
-        # A non-improved vertex's messages depend only on (arr,
-        # contacts), were emitted verbatim the round after arr last
-        # changed, and min-fold idempotently — so each round's state
-        # is bit-identical to the relax-all Jacobi form (the bounded-
-        # horizon "<= n_rounds contacts" semantics are per-round
-        # state equality, preserved exactly; pinned by the key's
-        # unchanged unrolled-CTE oracle). The frontier shrinks as
-        # arrivals settle instead of staying |reached|-sized.
-        frontier = state.filter(F.col("arr").isNotNull())
-        for _ in range(n_rounds):
-            msgs = (
-                e.join(frontier, e.src == frontier.id)
-                .filter(F.col("t") >= F.col("arr"))
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("t").alias("msg"))
-            )
-            new_state = (
-                state.withColumnRenamed("arr", "old")
-                .join(msgs, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce(F.col("old"), F.lit(2**62)),
-                        F.coalesce(F.col("msg"), F.lit(2**62)),
-                    ).alias("a2"),
-                    "old",
-                )
-                .select(
-                    "id",
-                    F.when(F.col("a2") < 2**62, F.col("a2")).alias("arr"),
-                    "old",
-                )
-                .localCheckpoint()
-            )
-            frontier = new_state.filter(
-                (F.col("arr").eqNullSafe(F.col("old")) == F.lit(False))
-            ).select("id", "arr")
-            converged = frontier.isEmpty()
-            state = new_state.select("id", "arr")
-            if converged:
-                break
+        state = _relax_min(
+            e, state, state.filter(F.col("arr").isNotNull()), "arr",
+            F.col("t"), n_rounds, edge_filter=F.col("t") >= F.col("arr"),
+        )
     return state.filter(F.col("arr").isNotNull())
 
 
@@ -646,6 +560,11 @@ def pregel_run(
     if unknown:
         raise ValueError(f"update targets unknown state columns: {sorted(unknown)}")
     state = vertices.select("id", *state_cols)
+    # The change flag rides in the checkpointed state (see _relax_min).
+    chg = F.lit(False)
+    for c in check_cols or []:
+        chg |= ~update.get(c, F.col(c)).eqNullSafe(F.col(c))
+    flag = [chg.alias("_chg")] if check_cols else []
     with LoopScope(edges.sparkSession) as scope:
         sym = scope.layout(symmetrize(edges, directed=directed), "src")
         for step in range(max_iter):
@@ -656,36 +575,16 @@ def pregel_run(
                 .agg(merge(F.col("msg")).alias("msg"))
             )
             new_state = state.join(msgs, "id", "left").select(
-                "id",
-                *[
-                    (update[c] if c in update else F.col(c)).alias(c)
-                    for c in state_cols
-                ],
+                "id", *[update.get(c, F.col(c)).alias(c) for c in state_cols], *flag
             )
             # convergence probing needs each step materialized; fixed-
             # iteration loops defer execution to the last eager step
             new_state = new_state.localCheckpoint(
                 eager=bool(check_cols) or step == max_iter - 1
             )
-            if check_cols:
-                changed = (
-                    new_state.alias("n")
-                    .join(state.alias("o"), "id")
-                    .filter(
-                        ~functools.reduce(
-                            lambda a, b: a & b,
-                            [
-                                F.col(f"n.{c}").eqNullSafe(F.col(f"o.{c}"))
-                                for c in check_cols
-                            ],
-                        )
-                    )
-                )
-                state = new_state
-                if changed.isEmpty():
-                    break
-            else:
-                state = new_state
+            state = new_state.select("id", *state_cols)
+            if check_cols and new_state.filter("_chg").isEmpty():
+                break
     return state
 
 

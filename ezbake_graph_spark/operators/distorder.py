@@ -64,7 +64,7 @@ from ezbake_graph_spark import tables
 # (sf0.1 orders = 150k, documents = 5k, events = 100k) so driver
 # artifacts and PLANS.md are unchanged, and far below where a single
 # 128 MB-partition executor window starts to thrash.
-WINDOW_GATE_ROWS = int(os.environ.get("EZGS_WINDOW_GATE_ROWS", "2000000"))
+WINDOW_GATE_ROWS = 2_000_000
 
 _ROWS_CACHE: dict = {}
 

@@ -1005,6 +1005,37 @@ def _pagerank_exact_sql() -> str:
     )
 
 
+def _exact_rank_edges(
+    spark: SparkSession, sf_dir: str, scope: LoopScope
+) -> tuple[DataFrame, DataFrame]:
+    """Edge build shared by the exact-integer PageRank loops: ``sym``,
+    the symmetrized part-supplier edges, and ``sym_d`` = (src, dst, d),
+    ``sym`` cached src-partitioned at the scope's width with each
+    source's degree ``d`` attached.
+
+    The degree rides on the cached edges, so a superstep's shares need
+    one join instead of two, and every message join shuffles ONLY the
+    vertex-state side — the |E|-row edge relation never moves again
+    (shares are the identical integer ``r div d``). The cache is
+    loop-scoped: dropped at scope exit, so every run pays its own
+    build. ``d`` is a count(*) WINDOW over the src partitioning the
+    cache needs anyway — ONE exchange, versus a degree aggregate, a
+    join and a repartition (three); exact integer count, bit-identical
+    ranks (same-session A/B: 3.66 → 3.22 s, rows equal)."""
+    edges = bipartite_edges(spark, sf_dir)
+    sym = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    sym_d = scope.cache(
+        sym.repartition(scope.partitions, "src").select(
+            "src",
+            "dst",
+            F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
+        )
+    )
+    return sym, sym_d
+
+
 @register(
     "graph_pagerank_exact",
     oracle=_pagerank_exact_sql(),
@@ -1030,38 +1061,10 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sizing count), mid-loop checkpoints LAZY (lineage truncation
     without a materialization job each — the whole 10-step chain
     executes as one job at the closing eager checkpoint, inside the
-    scope).
-
-    r12 optimization (guide §2.4 "two operations keyed the same way
-    share one exchange"): the per-superstep ``state ⨝ deg`` join is
-    FOLDED AWAY by attaching each source's degree to the symmetrized
-    edge set ONCE (``sym_d``), and ``sym_d`` is cached repartitioned
-    by ``src`` at the loop's pinned partition count, so every
-    superstep's message join shuffles ONLY the vertex-state side —
-    the |E|-row edge relation never moves again (the same layout
-    contract as graph/pregel.py ``symmetrize``). The per-edge share
-    is the identical integer ``r div d``; results are bit-identical
-    (same value-hash oracle)."""
+    scope). The per-superstep ``state ⨝ deg`` join is folded into the
+    degree-decorated edge cache (``_exact_rank_edges``)."""
     with LoopScope(spark, divisor=4) as scope:
-        edges = bipartite_edges(spark, sf_dir)
-        sym = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        # Loop-scoped cache (dropped at scope exit, so every run pays
-        # the decorate+repartition — VERDICT r12 #8). r13 build shape
-        # (guide §2.4 "share one exchange"): the degree is a count(*)
-        # WINDOW over the src partitioning the cache needs anyway — ONE
-        # exchange, vs the old deg-aggregate + join + repartition
-        # (three). Window per src = same per-task row placement the src
-        # layout already imposes; exact integer count, bit-identical
-        # ranks (same-session A/B: 3.66 → 3.22 s, rows equal).
-        sym_d = scope.cache(
-            sym.repartition(scope.partitions, "src").select(
-                "src",
-                "dst",
-                F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
-            )
-        )
+        sym, sym_d = _exact_rank_edges(spark, sf_dir, scope)
         state = (
             sym.select(F.col("src").alias("id")).distinct()
             .withColumn("r", F.lit(1_000_000).cast("long"))
@@ -1143,23 +1146,7 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanics as graph_pagerank_exact: pinned scope, one-time deg
     checkpoint, lazy mid-loop checkpoints, eager closing checkpoint."""
     with LoopScope(spark, divisor=4) as scope:
-        edges = bipartite_edges(spark, sf_dir)
-        sym = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        # r12: degree folded onto the src-partitioned cached edge set —
-        # one join per superstep instead of two, edge relation never
-        # re-shuffled (same move as graph_pagerank_exact; shares are
-        # the identical integer r div d). r13: loop-scoped cache and
-        # the one-exchange window-count build — see
-        # graph_pagerank_exact.
-        sym_d = scope.cache(
-            sym.repartition(scope.partitions, "src").select(
-                "src",
-                "dst",
-                F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
-            )
-        )
+        sym, sym_d = _exact_rank_edges(spark, sf_dir, scope)
         verts = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
         state = verts.withColumn(
             "r",

@@ -764,25 +764,32 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative part runs on the reduced edge set only. Oracle is a
     recursive-CTE min-label propagation — fully SQL-checkable.
     """
-    from ezbake_graph_spark.graph.pregel import connected_components
-
     tok = _doc_tokens(spark, sf_dir, max_doc=200)
     pairs = (
         _jaccard_pairs(tok)
         .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
     )
-    verts = tok.select(F.col("doc_id").alias("id")).distinct()
-    comp = connected_components(verts, pairs).select(
-        F.col("id").alias("doc_id"), F.col("component").alias("canonical_doc_id")
+    return _clusters_from_pairs(tok, pairs, "doc_id").orderBy("doc_id")
+
+
+def _clusters_from_pairs(
+    docs: DataFrame, pairs: DataFrame, id_col: str, max_iter: int = 30
+) -> DataFrame:
+    """Shared cluster-canonicalization tail of the dedup family: pair
+    graph (src, dst) -> Pregel connected components -> min-id
+    canonical representative. Returns (<id_col>, canonical_<id_col>,
+    cluster_size, is_canonical) for every input document."""
+    from ezbake_graph_spark.graph.pregel import connected_components
+
+    verts = docs.select(F.col(id_col).alias("id")).distinct()
+    comp = connected_components(verts, pairs, max_iter=max_iter).select(
+        F.col("id").alias(id_col),
+        F.col("component").alias(f"canonical_{id_col}"),
     )
-    w = Window.partitionBy("canonical_doc_id")
-    return (
-        comp.withColumn("cluster_size", F.count(F.lit(1)).over(w))
-        .withColumn(
-            "is_canonical", F.col("doc_id") == F.col("canonical_doc_id")
-        )
-        .orderBy("doc_id")
+    w = Window.partitionBy(f"canonical_{id_col}")
+    return comp.withColumn("cluster_size", F.count(F.lit(1)).over(w)).withColumn(
+        "is_canonical", F.col(id_col) == F.col(f"canonical_{id_col}")
     )
 
 

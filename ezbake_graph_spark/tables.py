@@ -136,11 +136,8 @@ def _fact_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     exceeds per-task work. At cluster scale the clamp hits
     defaultParallelism and file splits dominate anyway; the reduce side
     is governed separately by spark.sql.shuffle.partitions + AQE
-    coalescing. Override: SPARK_GRAFT_FACT_PARTITIONS.
+    coalescing.
     """
-    forced = int(os.environ.get("SPARK_GRAFT_FACT_PARTITIONS", "0"))
-    if forced:
-        return forced
     try:
         mb = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet")) >> 20
     except OSError:
