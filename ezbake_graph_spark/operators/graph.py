@@ -24,8 +24,9 @@ from ezbake_graph_spark.graph import (
     connected_components,
     label_propagation,
     pagerank,
+    symmetrize,
 )
-from ezbake_graph_spark.graph.pregel import LoopScope
+from ezbake_graph_spark.graph.pregel import LoopScope, _hits_walk
 from ezbake_graph_spark.registry import register
 
 # Shared DuckDB CTEs for the bipartite graph in unified id space.
@@ -1572,10 +1573,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins decorate each directed edge with endpoint degrees (degree
     table broadcast), one global agg — map-side combinable, single
     reduce to one row."""
-    edges = bipartite_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    sym = symmetrize(bipartite_edges(spark, sf_dir))
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     da = deg.select(F.col("src").alias("id"), F.col("d").alias("dx"))
     db = deg.select(F.col("src").alias("id"), F.col("d").alias("dy"))
@@ -2223,10 +2221,7 @@ def graph_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the run converges there — the contract pinned here is the exact
     move trajectory. Community RECOVERY is demonstrated on a planted
     two-clique graph in tests/test_graph.py."""
-    edges = bipartite_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    sym = symmetrize(bipartite_edges(spark, sf_dir))
     return louvain_local_moves(sym).orderBy("id")
 
 
@@ -2259,10 +2254,38 @@ def graph_louvain_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return louvain_local_moves(sym, weight_col="w").orderBy("id")
 
 
+def _coarsen(arcs: DataFrame, labels: DataFrame) -> DataFrame:
+    """One Louvain coarsen step: weighted arcs (src, dst, _w) under a
+    node labelling (id, community) become the community multigraph
+    (src, dst, _w) — both endpoints relabelled, then one keyed sum, so
+    self-loops carry the intra-community weight."""
+    return (
+        arcs.join(
+            labels.select(F.col("id").alias("src"), F.col("community").alias("cs")),
+            "src",
+        )
+        .join(
+            labels.select(F.col("id").alias("dst"), F.col("community").alias("cd")),
+            "dst",
+        )
+        .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+        .agg(F.sum("_w").alias("_w"))
+    )
+
+
+def _relabel(mem: DataFrame, labels: DataFrame) -> DataFrame:
+    """One level up the membership: base-node (id, community) whose
+    communities ``labels`` (id, community) assigns to coarser ones."""
+    return (
+        mem.select("id", F.col("community").alias("prev"))
+        .join(labels.select(F.col("id").alias("prev"), "community"), "prev")
+        .select("id", "community")
+    )
+
+
 def louvain_two_level(
     edges_sym: DataFrame,
-    rounds1: int = LOUVAIN_ROUNDS,
-    rounds2: int = LOUVAIN_ROUNDS,
+    rounds: int = LOUVAIN_ROUNDS,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Full (two-level) Louvain: local moves, COARSEN to the community
@@ -2271,61 +2294,38 @@ def louvain_two_level(
     every border node is individually stuck (a single level can only
     move nodes to NEIGHBOR communities; the coarse pass moves whole
     communities). Deterministic end to end: both levels are the
-    integer ``louvain_local_moves`` kernel, and the coarse graph's
-    arc weights are exact counts/sums (self-loops carry intra-community
-    weight; ``kic`` excludes them — they travel with the node — while
-    strength keeps them, the standard convention).
+    integer ``louvain_local_moves`` kernel (``rounds`` rounds each), and
+    the coarse graph's arc weights are exact counts/sums (self-loops
+    carry intra-community weight; ``kic`` excludes them — they travel
+    with the node — while strength keeps them, the standard
+    convention).
 
-    Scale: the coarsen step is one keyed agg over the edge list after
-    two label joins (broadcast-able once communities shrink); the
-    coarse graph is communities^2-bounded and usually tiny, so level 2
-    costs a fraction of level 1. Returns (id, community) where
-    community is the LEVEL-2 label of the node's level-1 community.
+    Scale: the coarsen step (``_coarsen``) is one keyed agg over the
+    edge list after two label joins (broadcast-able once communities
+    shrink); the coarse graph is communities^2-bounded and usually
+    tiny, so level 2 costs a fraction of level 1. Returns (id,
+    community) where community is the LEVEL-2 label of the node's
+    level-1 community.
     """
     # r13: the caller's edge frame is consumed twice (level-1 moves +
     # the coarsen join below); for the registered keys it is a full
     # union+distinct over the fact table — materialize it once.
     edges_sym = edges_sym.localCheckpoint(eager=True)
-    lvl1 = louvain_local_moves(edges_sym, rounds1, weight_col)
+    lvl1 = louvain_local_moves(edges_sym, rounds, weight_col)
     w_in = (
         F.col(weight_col).cast("long")
         if weight_col is not None
         else F.lit(1).cast("long")
     )
-    ce = (
-        edges_sym.select("src", "dst", w_in.alias("_w"))
-        .join(
-            lvl1.select(
-                F.col("id").alias("src"), F.col("community").alias("csrc")
-            ),
-            "src",
-        )
-        .join(
-            lvl1.select(
-                F.col("id").alias("dst"), F.col("community").alias("cdst")
-            ),
-            "dst",
-        )
-        .groupBy(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
-        .agg(F.sum("_w").alias("w"))
-    )
-    lvl2 = louvain_local_moves(ce, rounds2, weight_col="w", schedule="updown")
-    return lvl1.select(
-        "id", F.col("community").alias("c1")
-    ).join(
-        lvl2.select(
-            F.col("id").alias("c1"), F.col("community").alias("community")
-        ),
-        "c1",
-    ).select("id", "community")
+    ce = _coarsen(edges_sym.select("src", "dst", w_in.alias("_w")), lvl1)
+    lvl2 = louvain_local_moves(ce, rounds, weight_col="_w", schedule="updown")
+    return _relabel(lvl1, lvl2)
 
 
-def _louvain_two_level_sql(
-    rounds1: int = LOUVAIN_ROUNDS, rounds2: int = LOUVAIN_ROUNDS
-) -> str:
-    l1 = _louvain_rounds_sql(rounds1, "cm", "sym", "deg", "mm", False)
+def _louvain_two_level_sql(rounds: int = LOUVAIN_ROUNDS) -> str:
+    l1 = _louvain_rounds_sql(rounds, "cm", "sym", "deg", "mm", False)
     l2 = _louvain_rounds_sql(
-        rounds2, "dm", "ce", "deg2", "mm2", True, schedule="updown"
+        rounds, "dm", "ce", "deg2", "mm2", True, schedule="updown"
     )
     return f"""
 WITH edges AS (
@@ -2340,8 +2340,8 @@ cm0 AS (SELECT id, id AS label FROM deg),
 ce AS MATERIALIZED (
   SELECT c1.label AS src, c2.label AS dst, CAST(count(*) AS BIGINT) AS w
   FROM sym s
-  JOIN cm{rounds1} c1 ON c1.id = s.src
-  JOIN cm{rounds1} c2 ON c2.id = s.dst
+  JOIN cm{rounds} c1 ON c1.id = s.src
+  JOIN cm{rounds} c2 ON c2.id = s.dst
   GROUP BY 1, 2
 ), deg2 AS MATERIALIZED (
   SELECT src AS id, CAST(sum(w) AS BIGINT) AS deg FROM ce GROUP BY src
@@ -2349,7 +2349,7 @@ ce AS MATERIALIZED (
 dm0 AS (SELECT id, id AS label FROM deg2),
 {l2}
 SELECT n.id, d.label AS community
-FROM cm{rounds1} n JOIN dm{rounds2} d ON d.id = n.label
+FROM cm{rounds} n JOIN dm{rounds} d ON d.id = n.label
 ORDER BY n.id
 """
 
@@ -2366,10 +2366,7 @@ def graph_louvain_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra-community weight), 4 weighted rounds on the coarse graph,
     map back. Full value-hash oracle: both levels' unrolled CTE chains
     plus the coarsen join, generated from one shared template."""
-    edges = bipartite_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    sym = symmetrize(bipartite_edges(spark, sf_dir))
     return louvain_two_level(sym).orderBy("id")
 
 
@@ -2404,7 +2401,8 @@ def louvain_hierarchy(
     applies level by level.
 
     Scale: each level's moves are the keyed-shuffle ``louvain_local_
-    moves`` kernel; coarsening is one keyed agg after two label joins;
+    moves`` kernel; coarsening is one keyed agg after two label joins
+    (``_coarsen`` and ``_relabel``, shared with ``louvain_two_level``);
     each level's graph is communities^2-bounded, so cost decays
     geometrically down the hierarchy. Per level there is ONE bounded
     driver reduction (a 1-row modularity readout — the documented
@@ -2413,6 +2411,8 @@ def louvain_hierarchy(
     Output: (level, id, community, q_num, modularity), one row per
     base node per EMITTED level, level 1 rows always present.
     """
+    if max_levels < 1:
+        raise ValueError("louvain_hierarchy needs at least one level")
     w_in = (
         F.col(weight_col).cast("long")
         if weight_col is not None
@@ -2435,25 +2435,12 @@ def louvain_hierarchy(
             # the level either way; skip the wasted kernel run.
             break
         labels = louvain_local_moves(
-            g.select("src", "dst", F.col("_w").alias("w")),
+            g,
             rounds,
-            weight_col="w",
+            weight_col="_w",
             schedule="parity" if lvl == 1 else "updown",
         )
-        if mem is None:
-            mem = labels
-        else:
-            mem = (
-                mem.select("id", F.col("community").alias("prev"))
-                .join(
-                    labels.select(
-                        F.col("id").alias("prev"),
-                        F.col("community").alias("community"),
-                    ),
-                    "prev",
-                )
-                .select("id", "community")
-            )
+        mem = labels if mem is None else _relabel(mem, labels)
         mem = mem.localCheckpoint(eager=True)
         intra = (
             base.join(
@@ -2489,24 +2476,7 @@ def louvain_hierarchy(
         )
         out = lvl_df if out is None else out.unionByName(lvl_df)
         if lvl < max_levels:
-            g = (
-                g.join(
-                    labels.select(
-                        F.col("id").alias("src"), F.col("community").alias("cs")
-                    ),
-                    "src",
-                )
-                .join(
-                    labels.select(
-                        F.col("id").alias("dst"), F.col("community").alias("cd")
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-                .agg(F.sum("_w").alias("_w"))
-                .localCheckpoint(eager=True)
-            )
-    assert out is not None
+            g = _coarsen(g, labels).localCheckpoint(eager=True)
     return out
 
 
@@ -2621,10 +2591,7 @@ def graph_louvain_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_graph.py); the oracle unrolls all three levels and
     gates each on the same strict integer q-gain rule the Spark loop
     stops on."""
-    edges = bipartite_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    sym = symmetrize(bipartite_edges(spark, sf_dir))
     return louvain_hierarchy(sym).orderBy("level", "id")
 
 
@@ -2703,10 +2670,10 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 fixed supersteps on the directed part→supplier graph (hub mass
     on parts, authority on suppliers — the bipartite Kleinberg
     reading; suppliers have no out-edges so their hub is exactly 0,
-    and vice versa). Plan shape per superstep: two keyed join+grouped
-    sums (the pregel.hits posture) plus two 1-row totals broadcast
-    back — never a driver round trip inside the chain. BIGINT bound:
-    ``raw * 1e6`` needs Σhub_micro * 1e6 < 9.2e18, i.e. < 9.2e12
+    and vice versa). Plan shape per superstep: ``_hits_walk``, the
+    loop pregel.hits runs — two keyed join+grouped sums, each raw sum
+    checkpointed once, plus two 1-row totals broadcast back. BIGINT
+    bound: ``raw * 1e6`` needs Σhub_micro * 1e6 < 9.2e18, i.e. < 9.2e12
     micro-mass — after the first normalization the L1 mass is ≤ 1e6,
     so only superstep 1's raw (n_parts * 1e6) binds: safe below ~9e12
     parts; pre-scale the init mass beyond that (chi2-style caveat).
@@ -2720,59 +2687,22 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (VERDICT r12 #8), so every run pays the decorate cost.
         by_src = scope.cache(edges.repartition(scope.partitions, "src"))
         by_dst = scope.cache(edges.repartition(scope.partitions, "dst"))
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
+        verts = graph_vertices(edges)
+        hub0 = verts.select("id", F.lit(1_000_000).cast("long").alias("hub"))
+        hub, auth = _hits_walk(
+            by_src, by_dst, hub0, HITS_EXACT_ITERS, F.expr("(raw * 1000000) div t")
         )
-        hub = verts.select("id", F.lit(1_000_000).cast("long").alias("h"))
-        auth = None
-        for i in range(HITS_EXACT_ITERS):
-            # r13 (guide §1.2, VERDICT r12 #5): checkpoint each RAW
-            # half-step sum eagerly. Before, only the full superstep's
-            # ``hub`` checkpointed, so each L1 total's
-            # BroadcastExchange build re-executed the half-step chain
-            # it normalized and the second half-step re-executed the
-            # first — ~3 executions of every keyed shuffle per
-            # superstep (the old comment documented the bound; now
-            # each half-step executes ONCE and the broadcast builds
-            # scan a materialized RDD). Integer arithmetic throughout,
-            # so values are bit-identical (same value-hash oracle).
-            araw = (
-                by_src.join(hub.select(F.col("id").alias("src"), "h"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("h").alias("raw"))
-                .localCheckpoint(eager=True)
-            )
-            t_a = araw.agg(F.sum("raw").alias("t"))
-            auth = (
-                araw.crossJoin(F.broadcast(t_a))
-                .select("id", F.expr("(raw * 1000000) div t").alias("a"))
-            )
-            hraw = (
-                by_dst.join(auth.select(F.col("id").alias("dst"), "a"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("a").alias("raw"))
-                .localCheckpoint(eager=True)
-            )
-            t_h = hraw.agg(F.sum("raw").alias("t"))
-            hub = (
-                hraw.crossJoin(F.broadcast(t_h))
-                .select("id", F.expr("(raw * 1000000) div t").alias("h"))
-            )
+        h = F.coalesce(F.col("hub"), F.lit(0).cast("long"))
+        a = F.coalesce(F.col("auth"), F.lit(0).cast("long"))
         return (
             verts.join(hub, "id", "left")
-            .join(auth.withColumnRenamed("a", "a_"), "id", "left")
+            .join(auth, "id", "left")
             .select(
                 "id",
-                F.coalesce(F.col("h"), F.lit(0).cast("long")).alias("hub_micro"),
-                F.coalesce(F.col("a_"), F.lit(0).cast("long")).alias("auth_micro"),
-                F.round(
-                    F.coalesce(F.col("h"), F.lit(0)).cast("double") / 1_000_000, 6
-                ).alias("hub"),
-                F.round(
-                    F.coalesce(F.col("a_"), F.lit(0)).cast("double") / 1_000_000, 6
-                ).alias("auth"),
+                h.alias("hub_micro"),
+                a.alias("auth_micro"),
+                F.round(h.cast("double") / 1_000_000, 6).alias("hub"),
+                F.round(a.cast("double") / 1_000_000, 6).alias("auth"),
             )
             .orderBy("id")
             .localCheckpoint()

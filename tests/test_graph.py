@@ -845,7 +845,7 @@ def test_two_level_louvain_merges_superclusters(spark):
     }
     two = {
         r["id"]: r["community"]
-        for r in louvain_two_level(sym, rounds1=6, rounds2=6).collect()
+        for r in louvain_two_level(sym, rounds=6).collect()
     }
     # level 1: the four small cliques stay separate (border nodes are
     # individually stuck), background cliques each one community
@@ -912,7 +912,10 @@ def test_louvain_hierarchy_recovers_planted_three_tiers(spark):
     — the multi-pass behaviour full Louvain exists for. Cliques are
     never split at any level and the background never joins the
     chain."""
-    from ezbake_graph_spark.operators.graph import louvain_hierarchy
+    from ezbake_graph_spark.operators.graph import (
+        louvain_hierarchy,
+        louvain_two_level,
+    )
 
     edges = []
 
@@ -968,6 +971,11 @@ def test_louvain_hierarchy_recovers_planted_three_tiers(spark):
             assert len({mem[i] for i in c}) == 1
         chain_comms = {mem[c[0]] for c in cliques}
         assert not chain_comms & {mem[b[0]] for b in bg}
+    # level 2 is louvain_two_level's result: both run the same local
+    # moves, coarsen and relabel steps, and here level 2 is emitted, so
+    # the comparison is not vacuous
+    two = louvain_two_level(sym, rounds=4).collect()
+    assert by_level[2] == {r["id"]: r["community"] for r in two}
 
 
 def test_hits_exact_tracks_float_hits(spark):
@@ -1015,6 +1023,16 @@ def test_hits_rejects_zero_iterations(spark):
     edges = spark.createDataFrame([(0, 1)], "src long, dst long")
     with pytest.raises(ValueError, match="at least one superstep"):
         hits(edges, iterations=0)
+
+
+def test_louvain_hierarchy_rejects_zero_levels(spark):
+    """An explicit error, not an ``assert`` that ``python -O`` strips
+    (the function would then return ``None``)."""
+    from ezbake_graph_spark.operators.graph import louvain_hierarchy
+
+    edges = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
+    with pytest.raises(ValueError, match="at least one level"):
+        louvain_hierarchy(edges, max_levels=0)
 
 
 def test_incremental_components_bridge_and_new_nodes(spark):

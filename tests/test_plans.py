@@ -388,7 +388,10 @@ def _warm_jobs(spark, run) -> int:
 # delta min-relaxation loops (bfs, sssp, temporal reachability and the
 # dedup clustering) are pinned at their counts before they shared one
 # body; graph_bfs at 18, one probe fewer than its old
-# frontier-then-probe loop (19).
+# frontier-then-probe loop (19). HITS and the Louvain keys are pinned
+# at their counts before they shared ``_hits_walk`` and
+# ``_coarsen``/``_relabel``; graph_louvain_hierarchy schedules 47 or
+# 48 jobs from one warm call to the next, before and after.
 _LOOP_JOBS = {
     "graph_wcc": 15,
     "graph_pagerank_exact": 12,
@@ -397,6 +400,10 @@ _LOOP_JOBS = {
     "graph_sssp": 18,
     "graph_temporal_reachability": 23,
     "dedup_cluster_canonical": 17,
+    "graph_hits": 128,
+    "graph_louvain": 28,
+    "graph_louvain_two_level": 42,
+    "graph_louvain_hierarchy": 48,
 }
 
 
