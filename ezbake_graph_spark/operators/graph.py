@@ -2418,66 +2418,76 @@ def louvain_hierarchy(
         if weight_col is not None
         else F.lit(1).cast("long")
     )
-    base = edges_sym.select("src", "dst", w_in.alias("_w")).localCheckpoint(
-        eager=True
-    )
-    deg = base.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("deg"))
-    m2 = base.agg(F.sum("_w")).collect()[0][0]
-    g = base
-    mem: DataFrame | None = None
-    prev_q: int | None = None
-    out: DataFrame | None = None
-    for lvl in range(1, max_levels + 1):
-        if lvl > 1 and g.select("src").distinct().count() <= 1:
-            # Degenerate coarse graph (everything already one
-            # community): moves are the identity, so mem_k == mem_{k-1}
-            # and q_k == q_{k-1} — the oracle's strict-gain gate drops
-            # the level either way; skip the wasted kernel run.
-            break
-        labels = louvain_local_moves(
-            g,
-            rounds,
-            weight_col="_w",
-            schedule="parity" if lvl == 1 else "updown",
+    # One scope for the whole level loop: the per-level readouts (m2,
+    # the coarse-graph count, the modularity row) run with AQE off at
+    # the pinned width like the nested move rounds. With AQE on, its
+    # re-planning jobs vary in number from one identical call to the
+    # next, so the loop's job count would not be fixed.
+    with LoopScope(edges_sym.sparkSession):
+        base = edges_sym.select("src", "dst", w_in.alias("_w")).localCheckpoint(
+            eager=True
         )
-        mem = labels if mem is None else _relabel(mem, labels)
-        mem = mem.localCheckpoint(eager=True)
-        intra = (
-            base.join(
-                mem.select(F.col("id").alias("src"), F.col("community").alias("ca")),
-                "src",
+        deg = base.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("deg"))
+        m2 = base.agg(F.sum("_w")).collect()[0][0]
+        g = base
+        mem: DataFrame | None = None
+        prev_q: int | None = None
+        out: DataFrame | None = None
+        for lvl in range(1, max_levels + 1):
+            if lvl > 1 and g.select("src").distinct().count() <= 1:
+                # Degenerate coarse graph (everything already one
+                # community): moves are the identity, so mem_k == mem_{k-1}
+                # and q_k == q_{k-1} — the oracle's strict-gain gate drops
+                # the level either way; skip the wasted kernel run.
+                break
+            labels = louvain_local_moves(
+                g,
+                rounds,
+                weight_col="_w",
+                schedule="parity" if lvl == 1 else "updown",
             )
-            .join(
-                mem.select(F.col("id").alias("dst"), F.col("community").alias("cb")),
-                "dst",
+            mem = labels if mem is None else _relabel(mem, labels)
+            mem = mem.localCheckpoint(eager=True)
+            intra = (
+                base.join(
+                    mem.select(
+                        F.col("id").alias("src"), F.col("community").alias("ca")
+                    ),
+                    "src",
+                )
+                .join(
+                    mem.select(
+                        F.col("id").alias("dst"), F.col("community").alias("cb")
+                    ),
+                    "dst",
+                )
+                .filter(F.col("ca") == F.col("cb"))
+                .agg(F.coalesce(F.sum("_w"), F.lit(0).cast("long")).alias("intra"))
             )
-            .filter(F.col("ca") == F.col("cb"))
-            .agg(F.coalesce(F.sum("_w"), F.lit(0).cast("long")).alias("intra"))
-        )
-        tots = (
-            mem.join(deg, "id")
-            .groupBy("community")
-            .agg(F.sum("deg").alias("tot"))
-            .agg(F.sum(F.col("tot") * F.col("tot")).alias("s2"))
-        )
-        row = intra.crossJoin(tots).collect()[0]
-        q = m2 * row["intra"] - row["s2"]
-        if lvl >= 2 and prev_q is not None and q <= prev_q:
-            break  # no integer modularity gain: hierarchy converged
-        prev_q = q
-        lvl_df = mem.select(
-            F.lit(lvl).cast("int").alias("level"),
-            "id",
-            "community",
-            F.lit(q).cast("long").alias("q_num"),
-            F.round(
-                F.lit(q).cast("double") / F.lit(m2 * m2).cast("double"), 6
-            ).alias("modularity"),
-        )
-        out = lvl_df if out is None else out.unionByName(lvl_df)
-        if lvl < max_levels:
-            g = _coarsen(g, labels).localCheckpoint(eager=True)
-    return out
+            tots = (
+                mem.join(deg, "id")
+                .groupBy("community")
+                .agg(F.sum("deg").alias("tot"))
+                .agg(F.sum(F.col("tot") * F.col("tot")).alias("s2"))
+            )
+            row = intra.crossJoin(tots).collect()[0]
+            q = m2 * row["intra"] - row["s2"]
+            if lvl >= 2 and prev_q is not None and q <= prev_q:
+                break  # no integer modularity gain: hierarchy converged
+            prev_q = q
+            lvl_df = mem.select(
+                F.lit(lvl).cast("int").alias("level"),
+                "id",
+                "community",
+                F.lit(q).cast("long").alias("q_num"),
+                F.round(
+                    F.lit(q).cast("double") / F.lit(m2 * m2).cast("double"), 6
+                ).alias("modularity"),
+            )
+            out = lvl_df if out is None else out.unionByName(lvl_df)
+            if lvl < max_levels:
+                g = _coarsen(g, labels).localCheckpoint(eager=True)
+        return out
 
 
 def _louvain_hierarchy_sql(

@@ -98,7 +98,7 @@ def repetition_metrics(
     zero-shuffle but INTERPRETED lambda evaluation per token (Catalyst
     HOFs don't codegen), which saturated CPU linearly — measured 1.77s
     -> 0.92s at sf0.1 and 5.62s -> 2.29s at 4x (x4/x1 curve 3.9x ->
-    2.5x; experiments/repetition_variants.py). The shuffle this buys
+    2.5x; b68874a:experiments/repetition_variants.py). The shuffle this buys
     is keyed on (doc, gram) and combiner-reduced to distinct grams per
     doc, so it scales like every other keyed agg in the engine.
     ``explode_outer`` keeps NULL-text documents in the output with

@@ -50,57 +50,52 @@ def _load_all_operators() -> None:
     import ezbake_graph_spark.operators  # noqa: F401
 
 
-def _correctness_files() -> list[str]:
-    """Committed driver correctness records, sorted by round number."""
+def _trusted_rounds() -> dict[str, int]:
+    """Round of each registered key's latest TRUSTED driver row, read
+    from the committed CORRECTNESS_r*.json files (written at the repo
+    root by the driver each round) in round order, so the last write
+    wins. A row is trusted when it is green (no error, rows match, hash
+    not a recorded mismatch) or when the key has no oracle: a rows-only
+    key can never turn green, but its expected ``err: no_oracle`` record
+    still checked its row count, so re-emitting it every round would
+    burn a window slot forever. Reading the files at emission time
+    makes the rotation self-updating: next round, the keys verified
+    this round drop to the back."""
     import glob
+    import json
     import os
     import re
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def rnum(p: str) -> int:
-        m = re.search(r"_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    return sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")), key=rnum)
-
-
-def _green_keys(path: str) -> frozenset[str]:
-    """Keys with a green row in ONE correctness file — the single
-    definition of 'green' (no error, rows match, hash not a recorded
-    mismatch) shared by the cumulative and latest-round readers."""
-    import json
-
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return frozenset()
-    return frozenset(
-        key
-        for key, row in data.items()
-        if isinstance(row, dict)
-        and row.get("err") is None
-        and row.get("rows_match")
-        and row.get("hash_match") is not False
-    )
-
-
-def _driver_green() -> frozenset[str]:
-    """Keys with a green row in ANY prior round's CORRECTNESS_r*.json
-    (committed at the repo root by the driver each round). Reading them
-    at emission time makes the rotation self-updating: next round, the
-    keys verified this round automatically drop to the back."""
-    green: set[str] = set()
-    for path in _correctness_files():
-        green |= _green_keys(path)
-    return frozenset(green)
+    files = []
+    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m:
+            files.append((int(m.group(1)), path))
+    rounds: dict[str, int] = {}
+    for rnum, path in sorted(files):
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for key, row in data.items():
+            spec = REGISTRY.get(key)
+            if spec is None or not isinstance(row, dict):
+                continue
+            if spec.oracle is None or (
+                row.get("err") is None
+                and row.get("rows_match")
+                and row.get("hash_match") is not False
+            ):
+                rounds[key] = rnum
+    return rounds
 
 
 # Keys measured slow at sf0.01 in the local verify harness (≥1.3s
 # Spark-side, WARM-session full-registry run, round-4 refresh — the
-# round-3 cold measurements overstated several by 3-5x); pushed to the
-# back of their class so a time-budgeted correctness run checks more
+# round-3 cold measurements overstated several by 3-5x); pushed behind
+# keys of equal staleness so a time-budgeted correctness run checks more
 # keys first.
 _SLOW: frozenset[str] = frozenset(
     {
@@ -135,15 +130,8 @@ _SLOW: frozenset[str] = frozenset(
 
 
 # Driver correctness slots per round (measured: exactly 50 keys in each
-# of CORRECTNESS_r01-r03). Used to place the Pregel promotion below at
-# the TAIL of the window rather than its head.
+# of CORRECTNESS_r01-r03).
 _WINDOW = 50
-
-# Flagship iterative keys whose green row tends to go stale (VERDICT r3
-# item 4): rotate them in right behind any promoted fixpoints, but only
-# when their row is not already fresh from the immediately preceding
-# round.
-_ROTATE_PREGEL = ("graph_wcc", "graph_bfs")
 
 # Keys whose IMPLEMENTATION changed since their latest driver row
 # (VERDICT r7 #7: a changed key must never carry a stale green row for
@@ -155,124 +143,41 @@ _ROTATE_PREGEL = ("graph_wcc", "graph_bfs")
 _RECENTLY_CHANGED = (
     # Round rule (VERDICT r12 #10): the same commit that rewrites a
     # kernel must queue every registry key consuming it here, so the
-    # NEXT driver window re-oracles exactly what the optimizer touched.
-    # All 7 round-12 entries got fresh green r12 driver rows and left
-    # this list.
+    # NEXT driver window re-oracles exactly what the change touched.
     #
-    # r12 optimization commits (6540e20/5fc4d1d/1c2eb40) rewrote six
-    # kernels AFTER the r12 window was rotated, so their keys never got
-    # a fresh driver row (VERDICT r12 #1) — queue them now:
+    # Queued by the round-14 commits (since the r13 driver rows): one
+    # LoopScope for every iterative loop, symmetrize() without its own
+    # repartition, the shared _relax_min / _rank_walk / _hits_walk
+    # bodies, Louvain's shared _coarsen / _relabel and louvain_hierarchy
+    # in one scope, the exact-rank edge build, and _clusters_from_pairs.
+    # Value-hash-oracled consumers only: with the five rows-only ones
+    # (graph_pagerank, graph_ppr, graph_betweenness_sampled, graph_hits,
+    # dedup_semdedup) the list would overrun half the window.
     "graph_wcc",
-    "dedup_minhash",
-    "dedup_resolve_entities",
-    "dedup_resolve_entities_append",
+    "graph_wcc_incremental",
+    "graph_bfs",
+    "graph_sssp",
+    "graph_temporal_reachability",
+    "graph_labelprop",
+    "graph_kcore",
+    "graph_assortativity",
     "graph_pagerank_exact",
     "graph_ppr_exact",
-    "graph_temporal_reachability",
-    "graph_sssp",
-    "curate_corpus",
-    "prepare_training_data",
-    "dedup_prefix_filter",
-    # r13 optimization targets (queued by the commits that touch their
-    # kernels this round — HITS half-step checkpoints, Louvain round
-    # loop, ER-append shared subplan, minhash verify barrier, ktruss
-    # converged-support reuse, sym_d window build):
-    "graph_hits",
     "graph_hits_exact",
+    "graph_ktruss",
     "graph_louvain",
     "graph_louvain_weighted",
     "graph_louvain_two_level",
     "graph_louvain_hierarchy",
-    "graph_ktruss",
-    # consumers of graph/pregel.py symmetrize()/sizing-count hygiene
-    # fixes (cache → GC-managed localCheckpoint; values unchanged by
-    # construction, still re-oracled per the round rule):
-    "graph_bfs",
     "dedup_cluster_canonical",
-    "dedup_semdedup",
+    "dedup_resolve_entities",
+    "dedup_resolve_entities_append",
+    "curate_corpus",
+    "prepare_training_data",
+    "text_contrastive_pairs",
     "curate_images",
-    "multimodal_phash_near_dup",
     "sample_split_leakage_safe",
 )
-
-
-def _promoted_pregel() -> list[str]:
-    """SQL-oracled Pregel fixpoints with no driver row anywhere —
-    DERIVED from the registry, not a hardcoded list (VERDICT r3 item 4
-    root cause: the classifier put every never-green Pregel key
-    strictly last, so a 50-slot window never reached labelprop/kcore/
-    sssp even after they gained full oracles; any future key that
-    gains an oracle is promoted the same way automatically). Spliced
-    into the driver-window tail by ``_ordered_specs``; once green they
-    leave this set on the next emission.
-
-    Rows-only Pregel keys with NO driver record of any kind ride the
-    same splice (one 'rows' record each; once recorded they rotate as
-    class 2 like every other checked rows-only key) — without it the
-    class-4 rule parks a new oracle-less fixpoint (e.g. graph_hits,
-    round 8) strictly last forever."""
-    green = _driver_green()
-    checked = _checked_rounds()
-    return sorted(
-        name
-        for name, spec in REGISTRY.items()
-        if "pregel" in spec.tags
-        and (
-            (spec.oracle is not None and name not in green)
-            or (spec.oracle is None and name not in checked)
-        )
-    )
-
-
-def _latest_green() -> frozenset[str]:
-    """Keys green in the HIGHEST-numbered CORRECTNESS_r*.json only —
-    used to skip re-rotating a key whose row is already fresh."""
-    files = _correctness_files()
-    return _green_keys(files[-1]) if files else frozenset()
-
-
-def _latest_green_round() -> dict[str, int]:
-    """For each ever-green key, the round number of its most recent
-    green driver row. Files are walked in round order, so the last
-    write wins. Drives the staleness rotation (VERDICT r6 #2): green
-    keys re-emit oldest-round-first, so a key last verified in round 2
-    outranks one verified last round and the driver's ~50-slot window
-    continuously re-validates the stalest end of the registry."""
-    import re
-
-    rounds: dict[str, int] = {}
-    for path in _correctness_files():
-        m = re.search(r"_r(\d+)\.json$", path)
-        rnum = int(m.group(1)) if m else 0
-        for k in _green_keys(path):
-            rounds[k] = rnum
-    return rounds
-
-
-def _checked_rounds() -> dict[str, int]:
-    """Round of each key's latest driver row of ANY kind — including
-    the expected ``err: no_oracle`` record a rows-only key produces.
-    Distinct from ``_latest_green_round``: a rows-only key can never
-    turn green by construction, but its emission was still checked
-    (row count recorded), so re-emitting it every round would burn a
-    window slot forever. These keys rotate by staleness like green
-    keys instead of camping in the never-checked class."""
-    import json
-    import re
-
-    rounds: dict[str, int] = {}
-    for path in _correctness_files():
-        m = re.search(r"_r(\d+)\.json$", path)
-        rnum = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for k, row in data.items():
-            if isinstance(row, dict):
-                rounds[k] = rnum
-    return rounds
 
 
 def _ordered_specs() -> list[QuerySpec]:
@@ -280,32 +185,20 @@ def _ordered_specs() -> list[QuerySpec]:
     (~50 slots per round; it walks ``queries()`` in dict order).
 
     Rounds 1-2 spent 41 of round 2's 50 slots re-verifying keys already
-    green in round 1 (VERDICT r2 finding #1). The order that maximizes
-    *new* verified coverage per round:
+    green in round 1 (VERDICT r2 finding #1). One sort key spends the
+    window where it buys the most verification:
 
-    0. never-green, SQL-oracled, non-Pregel  — full value-hash, cheap
-    1. never-green, rows-only, non-Pregel    — weaker check, but no
-       DuckDB cost and these have no driver record at all yet
-    2. green/checked, Pregel or not          — ONE staleness rotation,
-       oldest driver row first (round 10: the old green-Pregel-first
-       split burned window slots re-checking fresh fixpoints while
-       r2/r3 rows aged; VERDICT r9 #8)
-    4. never-green Pregel fixpoints without an oracle — tens of
-       seconds each for a rows-only check: strictly last
-
-    plus one surgical override: the never-green ORACLED Pregel
-    fixpoints (``_promoted_pregel``, derived from the registry) and,
-    when stale, the ``_ROTATE_PREGEL`` pair are spliced into positions
-    ``_WINDOW - len(picked) .. _WINDOW - 1`` — the tail of the driver
-    window — so the flagship fixpoints get a driver row without
-    displacing more than a handful of cheap first-time slots
-    (VERDICT r3 item 4).
-
-    Within the green class, keys sort by the ROUND of
-    their latest green row, oldest first (VERDICT r6 #2): with every
-    key checked at least once, the window's remaining slots become a
-    rolling re-validation of the stalest records instead of
-    re-checking whatever happens to sit first in insertion order.
+    1. ``_RECENTLY_CHANGED`` first: their code changed since their last
+       driver row (VERDICT r7 #7), so that row no longer vouches for
+       them.
+    2. Then by the round of the latest trusted row (``_trusted_rounds``),
+       oldest first. Keys with NO trusted row read round 0, so new keys
+       and never-green oracled keys, Pregel fixpoints included, land
+       ahead of every re-verification slot. With every key checked, the
+       rest of the window is a rolling re-validation of the stalest
+       records (VERDICT r6 #2, r9 #8).
+    3. ``_SLOW`` keys last within a tie; the sort is stable, so
+       registration order breaks the remaining ties.
 
     Structural staleness floor: with the registry frozen at 322 keys
     and ~50 driver slots per round, a full rotation takes
@@ -316,61 +209,15 @@ def _ordered_specs() -> list[QuerySpec]:
     round); the driver rows are the independent audit trail that
     rotates through at the 7-round cadence.
     """
-    green = _driver_green()
-    last_round = _latest_green_round()
-    checked = _checked_rounds()
-
-    def key(spec: QuerySpec) -> tuple[int, int, int]:
-        pregel = "pregel" in spec.tags
-        if spec.name in _RECENTLY_CHANGED:
-            # code changed since the last driver row: re-verify FIRST
-            # (VERDICT r7 #7), ahead of even first-time keys
-            return (-1, 0, 1 if spec.name in _SLOW else 0)
-        if spec.name in green:
-            # Round 10: green Pregel no longer outranks green non-Pregel
-            # (old classes 2 vs 3). With coverage complete, the r9 window
-            # burned 18 slots re-checking Pregel keys verified THE ROUND
-            # BEFORE while 63 keys sat at r2/r3 — all green keys now
-            # rotate in ONE staleness class, oldest driver row first
-            # (VERDICT r9 #8: drain staleness; post-r10 target <= 6
-            # rounds). Flagship fixpoints keep their safety net via the
-            # _ROTATE_PREGEL tail splice.
-            cls = 2
-            staleness = last_round.get(spec.name, 0)
-        elif spec.oracle is None and spec.name in checked:
-            # rows-only key with a driver record: rotate, don't camp
-            cls = 2
-            staleness = checked[spec.name]
-        elif spec.name not in green and pregel:
-            cls, staleness = 4, 0
-        elif spec.oracle is not None:
-            cls, staleness = 0, 0
-        else:
-            cls, staleness = 1, 0
-        return (cls, staleness, 1 if spec.name in _SLOW else 0)
-
-    specs = sorted(REGISTRY.values(), key=key)  # stable within class
-
-    fresh = _latest_green()
-    tail = [
-        k
-        for k in _promoted_pregel()
-        + [k for k in _ROTATE_PREGEL if k in REGISTRY and k not in fresh]
-        # a key queued for re-verification already owns a slot at the
-        # WINDOW FRONT (class -1); splicing it to the tail would demote
-        # it out of the front the re-verify contract promises
-        if k not in _RECENTLY_CHANGED
-    ]
-    if not tail:
-        return specs
-    tailset = set(tail)
-    picked = sorted(
-        (s for s in specs if s.name in tailset),
-        key=lambda s: tail.index(s.name),
+    rounds = _trusted_rounds()
+    return sorted(
+        REGISTRY.values(),
+        key=lambda spec: (
+            spec.name not in _RECENTLY_CHANGED,
+            rounds.get(spec.name, 0),
+            spec.name in _SLOW,
+        ),
     )
-    rest = [s for s in specs if s.name not in tailset]
-    at = max(0, _WINDOW - len(picked))
-    return rest[:at] + picked + rest[at:]
 
 
 def queries() -> dict[str, QueryFn]:

@@ -73,7 +73,9 @@ def get_session(app_name: str = "ezbake-graph-spark") -> SparkSession:
         # Metaspace flat (~200 MB).
         .config("spark.sql.codegen.cache.maxEntries", "4000")
     )
-    # Ad-hoc overrides for experiments: "k=v;k2=v2".
+    # Extra builder confs, "k=v;k2=v2": perfbench/run.py sets its
+    # worker's private warehouse dir and initial heap here, and a static
+    # conf (the codegen cache cap above) can only be A/B-ed this way.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for kv in filter(None, extra.split(";")):
         k, _, v = kv.partition("=")

@@ -58,10 +58,9 @@ def _pregel_wcc(spark):
     )
 
 
-def _louvain(spark):
+def _sym(spark):
     e = _edges(spark)
-    sym = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return ops.louvain_local_moves(sym)
+    return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
 CONSUMERS = {
@@ -84,7 +83,8 @@ CONSUMERS = {
     "temporal_earliest_arrival": lambda s: pregel.temporal_earliest_arrival(
         _verts(s), _contacts(s), [0], n_rounds=4
     ),
-    "louvain_local_moves": _louvain,
+    "louvain_local_moves": lambda s: ops.louvain_local_moves(_sym(s)),
+    "louvain_hierarchy": lambda s: ops.louvain_hierarchy(_sym(s)),
     "graph_pagerank_exact": lambda s: ops.graph_pagerank_exact(s, SF_SMOKE),
     "graph_ppr_exact": lambda s: ops.graph_ppr_exact(s, SF_SMOKE),
     "graph_hits_exact": lambda s: ops.graph_hits_exact(s, SF_SMOKE),

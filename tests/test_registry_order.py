@@ -2,9 +2,10 @@
 
 The driver's correctness run is budget-capped (~50 slots/round) and
 walks ``queries()`` in dict order, so the order IS the verification
-coverage policy: keys without a green row in any committed
-CORRECTNESS_r*.json must come first, SQL-oracled before rows-only,
-expensive Pregel fixpoints last.
+coverage policy. One rule orders it: ``_RECENTLY_CHANGED`` keys first,
+then the stalest trusted driver row first, where a key with no trusted
+row in any committed CORRECTNESS_r*.json reads as round 0 and so comes
+ahead of every re-verification slot, Pregel fixpoint or not.
 """
 
 from __future__ import annotations
@@ -12,101 +13,100 @@ from __future__ import annotations
 from ezbake_graph_spark import registry
 
 
-def _classes() -> list[tuple[str, int]]:
-    keys = list(registry.queries())
-    green = registry._driver_green()
-    checked = registry._checked_rounds()
-    out = []
-    for k in keys:
-        spec = registry.REGISTRY[k]
-        pregel = "pregel" in spec.tags
-        g = k in green or (spec.oracle is None and k in checked)
-        if k in registry._RECENTLY_CHANGED:
-            c = -1  # code changed since last driver row: re-verify first
-            out.append((k, c))
-            continue
-        if not g and pregel:
-            c = 4
-        elif not g and spec.oracle is not None:
-            c = 0
-        elif not g:
-            c = 1
-        else:
-            # round 10: ONE green rotation class (Pregel no longer
-            # outranks non-Pregel; staleness alone orders re-checks)
-            c = 2
-        out.append((k, c))
-    return out
+def _without_rows(monkeypatch, *dropped: str) -> list[str]:
+    """Emission order as if ``dropped`` had no driver row and no
+    re-verify entry — the never-checked path, which the committed
+    records leave empty (every key has a row since CORRECTNESS_r09)."""
+    registry.queries()
+    real = registry._trusted_rounds()
+    rows = {k: r for k, r in real.items() if k not in dropped}
+    monkeypatch.setattr(registry, "_trusted_rounds", lambda: rows)
+    monkeypatch.setattr(
+        registry,
+        "_RECENTLY_CHANGED",
+        tuple(k for k in registry._RECENTLY_CHANGED if k not in dropped),
+    )
+    return list(registry.queries())
 
 
-def _tail_override() -> set[str]:
-    """Keys the window-tail promotion may splice out of class order
-    (VERDICT r3 item 4): the never-green oracled Pregel fixpoints
-    (registry-derived) + the stale-rotation pair."""
-    return set(registry._promoted_pregel()) | set(registry._ROTATE_PREGEL)
+def _reverify_slots(keys: list[str]) -> list[str]:
+    rounds = registry._trusted_rounds()
+    return [k for k in keys if k not in registry._RECENTLY_CHANGED and k in rounds]
 
 
 def test_never_verified_keys_emit_first():
-    cls = [c for k, c in _classes() if k not in _tail_override()]
-    assert cls == sorted(cls), "registry emission order must be class-sorted"
-
-
-def test_all_never_green_oracled_precede_all_green():
-    seen_green = False
-    for key, c in _classes():
-        if key in _tail_override():
-            continue
-        if c >= 2:
-            seen_green = True
-        if c == 0:
-            assert not seen_green, f"never-verified oracled key {key} emitted after green keys"
-
-
-def test_pregel_promotion_lands_in_driver_window():
-    """EVERY oracled-but-never-green Pregel fixpoint must appear inside
-    the driver's ~50-slot window (the plain classifier puts never-green
-    Pregel strictly last, so without the splice a window never reaches
-    them — the VERDICT r3 defect), at the TAIL so they displace as few
-    cheap first-time slots as possible. Registry-derived: a Pregel key
-    that gains an oracle in a future round is covered automatically."""
     keys = list(registry.queries())
-    expected = registry._promoted_pregel()
-    tail_len = len(expected) + len(registry._ROTATE_PREGEL)
-    for k in expected:
+    rounds = registry._trusted_rounds()
+    ranks = [(k not in registry._RECENTLY_CHANGED, rounds.get(k, 0)) for k in keys]
+    assert ranks == sorted(ranks), "emission order must follow the one sort key"
+
+
+def test_all_never_green_oracled_precede_all_green(monkeypatch):
+    """An oracled key without a green row, and a rows-only key without
+    any row, both emit ahead of every key that has a trusted row."""
+    dropped = ("agg_pricing_q1", "graph_pagerank")
+    assert registry.REGISTRY["agg_pricing_q1"].oracle is not None
+    keys = _without_rows(monkeypatch, *dropped)
+    first_reverify = keys.index(_reverify_slots(keys)[0])
+    for k in dropped:
+        pos = keys.index(k)
+        assert pos < first_reverify, f"never-verified {k} at {pos}, after green keys"
+
+
+def test_pregel_promotion_lands_in_driver_window(monkeypatch):
+    """EVERY oracled Pregel fixpoint without a green row must appear
+    inside the driver's ~50-slot window (an old classifier put
+    never-green Pregel strictly last, so a window never reached them —
+    the VERDICT r3 defect). Registry-derived: drop the rows of all of
+    them at once and they must still all fit."""
+    oracled_pregel = [
+        k
+        for k, spec in registry.REGISTRY.items()
+        if "pregel" in spec.tags and spec.oracle is not None
+    ]
+    assert oracled_pregel
+    keys = _without_rows(monkeypatch, *oracled_pregel)
+    for k in oracled_pregel:
         pos = keys.index(k)
         assert pos < registry._WINDOW, f"{k} at {pos} — outside driver window"
-        assert pos >= registry._WINDOW - tail_len, f"{k} at {pos} — should sit at window tail"
+
+
+def test_never_checked_pregel_keys_precede_reverification(monkeypatch):
+    """A Pregel key with an oracle (graph_sssp) and one without
+    (graph_pagerank) that have no driver row both land inside the
+    window, ahead of every re-verification slot."""
+    assert registry.REGISTRY["graph_sssp"].oracle is not None
+    assert registry.REGISTRY["graph_pagerank"].oracle is None
+    keys = _without_rows(monkeypatch, "graph_sssp", "graph_pagerank")
+    first_reverify = keys.index(_reverify_slots(keys)[0])
+    for k in ("graph_sssp", "graph_pagerank"):
+        pos = keys.index(k)
+        assert pos < registry._WINDOW, f"{k} at {pos} — outside driver window"
+        assert pos < first_reverify, f"{k} at {pos}, behind the re-verify slots"
 
 
 def test_green_keys_emit_stalest_round_first():
-    """VERDICT r6 #2: within the green class, keys re-emit ordered by
-    the round of their latest green driver row (oldest first), so the
-    window's spare slots continuously re-validate the stalest records
-    (22 join/graph keys were last checked in r2, 4 rounds stale).
-    Round 10: Pregel keys rotate in the SAME class, so they are no
-    longer excluded here — only the tail-splice override is."""
+    """VERDICT r6 #2: keys with a trusted row re-emit ordered by the
+    round of that row (oldest first), so the window's spare slots
+    continuously re-validate the stalest records (22 join/graph keys
+    were last checked in r2, 4 rounds stale). Pregel keys rotate in the
+    same order as every other key."""
     keys = list(registry.queries())
-    green = registry._driver_green()
-    rounds = registry._latest_green_round()
-    checked = registry._checked_rounds()
-    override = _tail_override()
-    seen = [
-        rounds.get(k, checked.get(k, 0))
-        for k in keys
-        if (k in green or (registry.REGISTRY[k].oracle is None and k in checked))
-        and k not in override
-        and k not in registry._RECENTLY_CHANGED
-    ]
+    rounds = registry._trusted_rounds()
+    seen = [rounds[k] for k in _reverify_slots(keys)]
     assert seen == sorted(seen), "green keys must emit oldest-green-round first"
     assert min(rounds.values()) < max(rounds.values())  # rotation is non-trivial
 
 
 def test_green_set_reads_correctness_files():
-    green = registry._driver_green()
+    registry.queries()
+    rounds = registry._trusted_rounds()
     # r1/r2 are committed in-repo; the union was 52 keys at round-3 start
-    assert "agg_pricing_q1" in green
-    assert "join_star_q5" in green
-    assert len(green) >= 52
+    assert "agg_pricing_q1" in rounds
+    assert "join_star_q5" in rounds
+    assert len(rounds) >= 52
+    # a rows-only key's expected no_oracle record is trusted
+    assert "graph_pagerank" in rounds
 
 
 def test_window_head_is_the_stalest_cohort():
@@ -115,44 +115,21 @@ def test_window_head_is_the_stalest_cohort():
     retire it) and replaces it with the steady-state policy (VERDICT
     r9 #8): with coverage complete, the driver window's spare slots
     must be spent on the STALEST records — every re-verification slot
-    inside the window (behind the ``_RECENTLY_CHANGED`` front,
-    excluding the Pregel tail splice) must be at least as stale as
-    every same-class key left outside the window. New keys without any
-    driver row still jump ahead via the never-checked classes; this
-    test only pins the rotation once they're checked."""
+    inside the window (behind the ``_RECENTLY_CHANGED`` front) must be
+    at least as stale as every key left outside the window. Keys
+    without any trusted row land inside the window, ahead of them."""
     keys = list(registry.queries())
-    checked = registry._checked_rounds()
-    never = {
-        k
-        for k, spec in registry.REGISTRY.items()
-        if k not in checked
-        and "pregel" not in spec.tags
-        and k not in registry._RECENTLY_CHANGED
-    }
-    # Brand-new keys (no driver row yet) are expected between rounds;
-    # they must land inside the driver window, ahead of every
-    # re-verification slot (the never-checked classes sort first).
-    override = _tail_override()
-    for k in never:
-        pos = keys.index(k)
-        assert pos < registry._WINDOW, f"new key {k} outside driver window"
-    rounds = registry._latest_green_round()
-
-    def staleness(k):
-        return rounds.get(k, checked.get(k, 0))
-
-    rotation = [
-        k
-        for k in keys
-        if k not in override
-        and k not in registry._RECENTLY_CHANGED
-        and k in checked
-    ]
+    rounds = registry._trusted_rounds()
+    for k in keys:
+        if k not in rounds and k not in registry._RECENTLY_CHANGED:
+            pos = keys.index(k)
+            assert pos < registry._WINDOW, f"new key {k} outside driver window"
+    rotation = _reverify_slots(keys)
     n_window = sum(1 for k in keys[: registry._WINDOW] if k in set(rotation))
     inside, outside = rotation[:n_window], rotation[n_window:]
     assert inside and outside, "rotation degenerate: widen the registry"
-    assert max(staleness(k) for k in inside) <= min(
-        staleness(k) for k in outside
+    assert max(rounds[k] for k in inside) <= min(
+        rounds[k] for k in outside
     ), "window head must be drawn from the stalest checked cohort"
 
 
