@@ -266,9 +266,11 @@ def harmonic_closeness(
     Every superstep is one keyed join + min-aggregate with an eagerly
     checkpointed frontier (same discipline as graph/pregel.py).
     Driver round-trips, stated per the pregel.py convention: one
-    ``vertices.count()`` at plan build (the estimator's N) plus one
-    2-value convergence aggregate per relaxation superstep — bounded
-    by ``max_iter``, each a scalar fetch, never a row collect.
+    ``vertices.count()`` at plan build (the estimator's N); the
+    convergence test (pair count and distance total both stable) is
+    observed on each superstep's checkpoint job
+    (``observed_checkpoint``), so it adds no job and never collects
+    rows.
 
     Returns (id, n_reached, harmonic_centrality) for every vertex that
     reaches >= 1 (sampled) target. Reciprocals are summed in integer
@@ -284,6 +286,8 @@ def harmonic_closeness(
     >>> est.orderBy("id").first()["harmonic_centrality"]  # 3/3 * (1+1/2+1/3)
     1.833333
     """
+    from ezbake_graph_spark.graph.pregel import observed_checkpoint
+
     n_vertices = vertices.count()
     # reversed edges: relaxing from target t over reversed arcs yields
     # d(v -> t) for every v, i.e. out-closeness with |S| sources
@@ -306,23 +310,21 @@ def harmonic_closeness(
     dist = rev_seed.select(
         F.col("src").alias("t"), F.col("dst").alias("v"), F.lit(1).alias("d")
     )
-    n_pairs, sum_d = -1, -1
+    last = None
     for _ in range(max_iter):
         extended = (
             dist.alias("r")
             .join(rev.alias("e"), F.col("r.v") == F.col("e.src"))
             .select("r.t", F.col("e.dst").alias("v"), (F.col("r.d") + 1).alias("d"))
         )
-        dist = (
-            dist.unionByName(extended)
-            .groupBy("t", "v")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
+        dist, seen = observed_checkpoint(
+            dist.unionByName(extended).groupBy("t", "v").agg(F.min("d").alias("d")),
+            n=F.count(F.lit(1)),
+            s=F.sum("d"),
         )
-        stats = dist.agg(F.count(F.lit(1)).alias("n"), F.sum("d").alias("s")).collect()[0]
-        if (stats["n"], stats["s"]) == (n_pairs, sum_d):
+        if seen == last:
             break
-        n_pairs, sum_d = stats["n"], stats["s"]
+        last = seen
     micro = F.round(F.lit(1_000_000.0) / F.col("d")).cast("long")
     per_v = (
         dist.filter(F.col("t") != F.col("v"))

@@ -16,16 +16,15 @@ recompute; eager versus lazy: see ``LoopScope``).
   (WCC, BFS, weighted SSSP, temporal earliest arrival) are one delta
   min-relaxation, ``_relax_min``; PageRank and personalized PageRank
   are one walk, ``_rank_walk``.
-- Convergence is a flag-in-state probe: the superstep's own ``select``
-  writes a ``_chg`` column into the checkpointed state, and the check
-  is a tiny ``filter("_chg").isEmpty()`` scan of it, never a new⨝old
-  join (``_relax_min``, ``pregel_run``); fixed-iteration algorithms
-  skip it.
+- A loop reads a scalar of its state (a changed count, a row count,
+  an L1 total) one way: ``observed_checkpoint`` takes it off the
+  superstep's own eager checkpoint job, never a probe job or a
+  new⨝old join; fixed-iteration algorithms read nothing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -77,8 +76,9 @@ class LoopScope:
     set, so the materialization is cheap relative to the superstep's
     edge shuffle. On a multi-node cluster, swap localCheckpoint for
     reliable ``checkpoint()`` every ~5 supersteps (executor loss
-    safety). Loops with a per-superstep convergence probe checkpoint
-    eagerly (the probe is an action anyway). FIXED-iteration loops
+    safety). Loops that read a scalar of each superstep's state
+    checkpoint eagerly, with ``observed_checkpoint``, which reads the
+    scalar off that checkpoint job. FIXED-iteration loops
     (pagerank/ppr/labelprop) checkpoint intermediate steps LAZILY
     (``eager=False``): lineage still truncates and the persisted RDD
     still computes exactly once (both in-superstep consumers share
@@ -128,12 +128,14 @@ class LoopScope:
         in-memory equivalent of bucketing the edge table by src at
         100 TB.
 
-        ``df`` is materialized ONCE (eager localCheckpoint) so the
-        sizing count and the repartition don't each recompute the
-        caller's lineage (a dedup, a coarsen chain). A localCheckpoint's
-        blocks are released by the ContextCleaner when the plan goes
-        unreachable, and the cache is dropped at scope exit, so memory
-        is bounded and every run pays its own materialization.
+        ``df`` is materialized ONCE (eager localCheckpoint, its row
+        count observed on that job) so the repartition doesn't
+        recompute the caller's lineage (a dedup, a coarsen chain), and
+        ``_detached`` from that lineage so loop caches built over the
+        layout are hit. A localCheckpoint's blocks are released by the
+        ContextCleaner when the plan goes unreachable, and the cache is
+        dropped at scope exit, so memory is bounded and every run pays
+        its own materialization.
 
         The width is sized to edge volume (~250k edge rows per task),
         clamped to the provisional width, and pinned for the rest of
@@ -144,9 +146,56 @@ class LoopScope:
         edge counts push this to the clamp, i.e. full cluster
         parallelism.
         """
-        df = df.localCheckpoint(eager=True)
-        self._pin(max(4, min(self.partitions, df.count() // 250_000 + 1)))
-        return self.cache(df.repartition(self.partitions, *keys))
+        df, seen = observed_checkpoint(df, rows=F.count(F.lit(1)))
+        self._pin(max(4, min(self.partitions, seen["rows"] // 250_000 + 1)))
+        return self.cache(_detached(df).repartition(self.partitions, *keys))
+
+
+def observed_checkpoint(
+    df: DataFrame, *cols: Column | str, **aggs: Column
+) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df.select(*cols)`` (of ``df`` when
+    no ``cols``) and the aggregates ``aggs`` over ``df``'s rows, as
+    {name: Python number}: the one way a loop reads a scalar of the
+    state it just materialized (a changed count, a row count, a total).
+
+    The aggregates ride in an ``Observation`` that Spark fills from the
+    checkpoint job's own tasks, so the read schedules no job; every
+    separate probe (an ``isEmpty``/``count`` scan, an ``agg().collect()``,
+    a 1-row total broadcast back) costs one more job per superstep.
+    ``Observation.get`` waits for the query's end event, yet on the
+    edge frame of the scale-0.004 benchmark graph (4 cores) an
+    observed checkpoint took 48 ms median against 65 ms for
+    checkpoint-then-``isEmpty``. Aggregating before the projection
+    counts changes against a previous value the state no longer
+    carries. Over an empty frame, also one the optimizer folds to
+    empty, a count reads 0 and a sum ``None``.
+    """
+    seen = Observation()
+    df = df.observe(seen, *[agg.alias(name) for name, agg in aggs.items()])
+    if cols:
+        df = df.select(*cols)
+    return df.localCheckpoint(eager=True), seen.get
+
+
+def _detached(df: DataFrame) -> DataFrame:
+    """``df``'s materialized partitions (a checkpoint's) under a new plan
+    leaf that inherits neither the computing plan's size estimate nor
+    its output partitioning; a ``localCheckpoint`` inherits both.
+    Inherited sizes multiply through self-joins, size_{n+1} ~
+    size_n^(J+1) for J self-joins per round, until planning drowns in
+    BigInteger arithmetic (the 4-truss loop, SCALE.md §21). An
+    inherited hash partitioning on a layout makes the loop caches built
+    over it (Louvain's ``deg`` and ``m2``) miss wherever the layout
+    meets itself in a self-join, so they re-aggregate every round
+    (sf0.001: graph_louvain 27 warm jobs attached, 18 detached). One
+    py4j call; no Python round trip.
+    """
+    jdf = df._jdf
+    jds = df.sparkSession._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(jds, df.sparkSession)
 
 
 def symmetrize(edges: DataFrame, directed: bool = False) -> DataFrame:
@@ -195,9 +244,9 @@ def _relax_min(
     instead of staying |V|-sized.
 
     The change flag ``~new.eqNullSafe(old)`` rides inside the eagerly
-    checkpointed state, so the convergence probe is a scan of the
-    materialized RDD, not a new⨝old join (an extra shuffle job per
-    superstep on data the update had already seen).
+    checkpointed state, so the next frontier is a filter of the
+    materialized RDD, not a new⨝old join, and the stop test reads the
+    flag's count off the checkpoint job (``observed_checkpoint``).
     """
     for _ in range(max_iter):
         sent = edges.join(frontier, edges.src == frontier.id)
@@ -205,14 +254,15 @@ def _relax_min(
             sent = sent.filter(edge_filter)
         msgs = sent.groupBy(F.col("dst").alias("id")).agg(F.min(msg).alias("msg"))
         new = F.least(F.col(col), F.col("msg"))
-        new_state = (
-            state.join(msgs, "id", "left")
-            .select("id", new.alias(col), (~new.eqNullSafe(F.col(col))).alias("_chg"))
-            .localCheckpoint()
+        new_state, seen = observed_checkpoint(
+            state.join(msgs, "id", "left").select(
+                "id", new.alias(col), (~new.eqNullSafe(F.col(col))).alias("_chg")
+            ),
+            changed=F.count_if("_chg"),
         )
         frontier = new_state.filter("_chg").select("id", col)
         state = new_state.select("id", col)
-        if frontier.isEmpty():
+        if not seen["changed"]:
             break
     return state
 
@@ -303,38 +353,39 @@ def _hits_walk(
 ) -> tuple[DataFrame, DataFrame]:
     """The HITS superstep, ``iterations`` times: auth from hubs along
     the edges, then hubs from the NEW auths, each half-step's ``raw``
-    sum normalized by ``norm``, a Column over ``raw`` and its 1-row L1
-    total ``t`` (broadcast back — no driver round trip). ``by_src`` and
-    ``by_dst`` are the edges partitioned by each endpoint, so both joins
-    co-locate and only the score side shuffles; ``hub`` is the start
-    (id, hub) frame. Returns the last (id, hub) and (id, auth) frames.
+    sum normalized by ``norm``, a Column over ``raw`` and its L1 total
+    ``t``. ``by_src`` and ``by_dst`` are the edges partitioned by each
+    endpoint, so both joins co-locate and only the score side shuffles;
+    ``hub`` is the start (id, hub) frame. Returns the last (id, hub)
+    and (id, auth) frames.
 
-    Each half-step's raw sum is eagerly checkpointed (r13, VERDICT r12
-    #5). With only the full superstep checkpointed, each total's
-    BroadcastExchange build re-executed the half-step it normalized and
-    the second half-step re-executed the first: ~4-6 executions of every
-    half-step per superstep. Now each executes once and the broadcast
-    builds scan a materialized RDD (measured sf0.1: 56 s → 11.9 s for
-    ``hits``' 20 supersteps).
+    Each half-step's raw sum is eagerly checkpointed, so it executes
+    once, and its total ``t`` is observed on that checkpoint job
+    (``observed_checkpoint``) and applied as a literal of ``raw``'s SQL
+    type: ``raw / t`` and ``(raw * 1000000) div t`` are the same
+    operations they were on a 1-row total broadcast back, without that
+    broadcast's build job.
     """
+
+    def normalized(raw: DataFrame, name: str) -> DataFrame:
+        raw, seen = observed_checkpoint(raw, t=F.sum("raw"))
+        t = F.lit(seen["t"]).cast(raw.schema["raw"].dataType)
+        return raw.withColumn("t", t).select("id", norm.alias(name))
+
     auth = None
     for _ in range(iterations):
-        araw = (
+        auth = normalized(
             by_src.join(hub.select(F.col("id").alias("src"), "hub"), "src")
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("raw"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("hub").alias("raw")),
+            "auth",
         )
-        t_a = araw.agg(F.sum("raw").alias("t"))
-        auth = araw.crossJoin(F.broadcast(t_a)).select("id", norm.alias("auth"))
-        hraw = (
+        hub = normalized(
             by_dst.join(auth.select(F.col("id").alias("dst"), "auth"), "dst")
             .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("auth").alias("raw"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("auth").alias("raw")),
+            "hub",
         )
-        t_h = hraw.agg(F.sum("raw").alias("t"))
-        hub = hraw.crossJoin(F.broadcast(t_h)).select("id", norm.alias("hub"))
     return hub, auth
 
 
@@ -403,15 +454,13 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
                 lambda acc: acc.getField("best"),
             )
             h = hist.groupBy("id").agg(h_of.alias("h"))
-            new_c = (
-                c.withColumnRenamed("c", "old")
-                .join(h, "id")
-                .select("id", F.least(F.col("old"), F.col("h")).alias("c"), "old")
-                .localCheckpoint()
+            c, seen = observed_checkpoint(
+                c.join(h, "id"),
+                "id",
+                F.least(F.col("c"), F.col("h")).alias("c"),
+                changed=F.count_if(F.col("h") < F.col("c")),
             )
-            converged = new_c.filter(F.col("c") != F.col("old")).isEmpty()
-            c = new_c.select("id", "c")
-            if converged:
+            if not seen["changed"]:
                 break
     return c
 
@@ -577,9 +626,11 @@ def pregel_run(
       vertices that received nothing this superstep (coalesce it).
       State columns absent from the dict carry over unchanged.
     - ``check_cols``: converge (stop early) when these state columns
-      are unchanged for every vertex — adds one tiny probe job per
-      superstep; omit for fixed-iteration algorithms (lineage then
-      executes as ONE job at the final superstep, see ``LoopScope``).
+      are unchanged for every vertex — every superstep then checkpoints
+      eagerly and counts its changes on that job
+      (``observed_checkpoint``); omit for fixed-iteration algorithms
+      (lineage then executes as ONE job at the final superstep, see
+      ``LoopScope``).
 
     Scale posture identical to the named algorithms: edges cached
     src-partitioned once, only vertex state shuffles per superstep,
@@ -604,11 +655,9 @@ def pregel_run(
     if unknown:
         raise ValueError(f"update targets unknown state columns: {sorted(unknown)}")
     state = vertices.select("id", *state_cols)
-    # The change flag rides in the checkpointed state (see _relax_min).
     chg = F.lit(False)
     for c in check_cols or []:
         chg |= ~update.get(c, F.col(c)).eqNullSafe(F.col(c))
-    flag = [chg.alias("_chg")] if check_cols else []
     with LoopScope(edges.sparkSession) as scope:
         sym = scope.layout(symmetrize(edges, directed=directed), "src")
         for step in range(max_iter):
@@ -618,17 +667,14 @@ def pregel_run(
                 .groupBy("id")
                 .agg(merge(F.col("msg")).alias("msg"))
             )
-            new_state = state.join(msgs, "id", "left").select(
-                "id", *[update.get(c, F.col(c)).alias(c) for c in state_cols], *flag
-            )
-            # convergence probing needs each step materialized; fixed-
-            # iteration loops defer execution to the last eager step
-            new_state = new_state.localCheckpoint(
-                eager=bool(check_cols) or step == max_iter - 1
-            )
-            state = new_state.select("id", *state_cols)
-            if check_cols and new_state.filter("_chg").isEmpty():
-                break
+            joined = state.join(msgs, "id", "left")
+            cols = ["id", *[update.get(c, F.col(c)).alias(c) for c in state_cols]]
+            if check_cols:
+                state, seen = observed_checkpoint(joined, *cols, changed=F.count_if(chg))
+                if not seen["changed"]:
+                    break
+            else:  # fixed iterations: one job, at the last (eager) step
+                state = joined.select(*cols).localCheckpoint(eager=step == max_iter - 1)
     return state
 
 
@@ -656,11 +702,11 @@ def betweenness_sampled(
     Scale posture: supersteps = 2 x diameter regardless of |S|; each
     is one keyed join + aggregate whose state is |S| x reached
     vertices rows (the sample size bounds the multiplier), with the
-    edge set cached loop-wide and one emptiness probe per level —
-    never a row collect. sigma is exact in int64 up to 2^63 paths;
-    delta is float64, deterministic up to shuffle-sum ordering (tests
-    compare with tolerance). Returns (id, betweenness) for every
-    vertex.
+    edge set cached loop-wide and each level's row count observed on
+    its checkpoint job — never a row collect. sigma is exact in int64
+    up to 2^63 paths; delta is float64, deterministic up to
+    shuffle-sum ordering (tests compare with tolerance). Returns (id,
+    betweenness) for every vertex.
     """
     n_vertices = vertices.count()
     n_s = max(1, len(sources))
@@ -669,12 +715,13 @@ def betweenness_sampled(
     delta_frames: list[DataFrame] = []
     with LoopScope(spark) as scope:
         sym = scope.layout(symmetrize(edges), "src")
-        lvl0 = (
-            roots.join(vertices, roots.root == vertices.id)
-            .select("root", "id", F.lit(1).cast("long").alias("sigma"))
-            .localCheckpoint()
+        lvl0, seen = observed_checkpoint(
+            roots.join(vertices, roots.root == vertices.id).select(
+                "root", "id", F.lit(1).cast("long").alias("sigma")
+            ),
+            rows=F.count(F.lit(1)),
         )
-        if lvl0.isEmpty():
+        if not seen["rows"]:
             return vertices.select("id", F.lit(0.0).alias("betweenness"))
         levels = [lvl0]
         visited = lvl0.select("root", "id")
@@ -687,8 +734,8 @@ def betweenness_sampled(
                 .groupBy("root", "id")
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            nxt = msgs.localCheckpoint()
-            if nxt.isEmpty():
+            nxt, seen = observed_checkpoint(msgs, rows=F.count(F.lit(1)))
+            if not seen["rows"]:
                 break
             levels.append(nxt)
             visited = visited.unionByName(nxt.select("root", "id")).localCheckpoint()

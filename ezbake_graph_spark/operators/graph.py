@@ -26,7 +26,12 @@ from ezbake_graph_spark.graph import (
     pagerank,
     symmetrize,
 )
-from ezbake_graph_spark.graph.pregel import LoopScope, _hits_walk
+from ezbake_graph_spark.graph.pregel import (
+    LoopScope,
+    _detached,
+    _hits_walk,
+    observed_checkpoint,
+)
 from ezbake_graph_spark.registry import register
 
 # Shared DuckDB CTEs for the bipartite graph in unified id space.
@@ -683,34 +688,12 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nation_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed nation trade edges (c_nation → s_nation per order line,
-    self-loops dropped): the heavy data-proportional derivation —
-    broadcast dims around one keyed orderkey shuffle — producing a
-    derived graph bounded by the nation-dimension cardinality."""
-    o = tables.load(spark, sf_dir, "orders")
-    c = tables.load(spark, sf_dir, "customer")
-    li = tables.load(spark, sf_dir, "lineitem")
-    s = tables.load(spark, sf_dir, "supplier")
-    cust_nation = o.join(
-        F.broadcast(c), o.o_custkey == c.c_custkey
-    ).select(F.col("o_orderkey").alias("ok"), F.col("c_nationkey").alias("src"))
-    supp_nation = li.join(
-        F.broadcast(s), li.l_suppkey == s.s_suppkey
-    ).select(F.col("l_orderkey").alias("ok"), F.col("s_nationkey").alias("dst"))
-    return (
-        cust_nation.join(supp_nation, "ok")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint()  # tiny (≤ |nations|²); truncate the 4-table lineage
-    )
-
-
 def _nation_trade_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nation trade edges with order-line counts (src, dst, n) — the
-    weighted variant of ``_nation_trade_edges``, same broadcast-dims
-    derivation with the distinct replaced by a keyed count."""
+    """Directed nation trade edges with order-line counts (src, dst, n):
+    c_nation → s_nation per order line, self-loops dropped. The heavy
+    data-proportional derivation (broadcast dims around one keyed
+    orderkey shuffle) produces a derived graph bounded by the
+    nation-dimension cardinality."""
     o = tables.load(spark, sf_dir, "orders")
     c = tables.load(spark, sf_dir, "customer")
     li = tables.load(spark, sf_dir, "lineitem")
@@ -727,6 +710,14 @@ def _nation_trade_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+def _nation_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (src, dst) nation trade edges: the projection of
+    ``_nation_trade_weighted`` (column pruning drops the count, leaving
+    the same keyed aggregate a distinct runs), checkpointed — tiny
+    (≤ |nations|²), and the 4-table lineage is truncated."""
+    return _nation_trade_weighted(spark, sf_dir).select("src", "dst").localCheckpoint()
 
 
 _SCC_SQL = """
@@ -777,22 +768,24 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm is forward/backward pivot coloring over the Pregel loop
     instead, trading closure size for O(#SCC) supersteps. Oracle is
     the identical fixpoint as a recursive CTE."""
-    edges = _nation_trade_edges(spark, sf_dir)
-    reach = edges
-    n_reach = reach.count()
+    # _nation_trade_edges, with its pair count read off the checkpoint
+    pairs = F.count(F.lit(1))
+    edges, seen = observed_checkpoint(
+        _nation_trade_weighted(spark, sf_dir).select("src", "dst"), pairs=pairs
+    )
+    reach, n_reach = edges, seen["pairs"]
     while True:
         extended = (
             reach.alias("r")
             .join(edges.alias("e"), F.col("r.dst") == F.col("e.src"))
             .select(F.col("r.src").alias("src"), F.col("e.dst").alias("dst"))
         )
-        reach = (
-            reach.unionByName(extended).distinct().localCheckpoint()
+        reach, seen = observed_checkpoint(
+            reach.unionByName(extended).distinct(), pairs=pairs
         )
-        n_next = reach.count()
-        if n_next == n_reach:
+        if seen["pairs"] == n_reach:
             break
-        n_reach = n_next
+        n_reach = seen["pairs"]
     verts = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
@@ -846,52 +839,29 @@ ORDER BY nation_id
 def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Harmonic closeness centrality of the directed nation trade
     graph: h(v) = Σ_{u reachable, u≠v} 1/d(v,u), computed from
-    all-pairs min-hop distances.
+    all-pairs min-hop distances — ``api.harmonic_closeness`` with every
+    vertex a target (``sample=None``), whose estimator scale is then
+    exactly 1.0.
 
-    The APSP loop relaxes (src, dst, d) → min(d) to a fixpoint (pair
-    count and total distance both stable); each reciprocal is rounded
-    to integer micro-units BEFORE the sum so the centrality is an
-    exact order-free integer sum in both engines (a float Σ 1/d would
-    drift with summation order). Distances live on the derived
+    The APSP loop relaxes (t, v, d) → min(d) to a fixpoint (pair count
+    and total distance both stable); each reciprocal is rounded to
+    integer micro-units BEFORE the sum so the centrality is an exact
+    order-free integer sum in both engines (a float Σ 1/d would drift
+    with summation order). Distances live on the derived
     dimension-bounded graph — same scale posture as graph_scc: the
     data-proportional stage is the edge derivation, not the fixpoint.
-    At data-scale vertex counts, use the IMPLEMENTED sampling path
-    ``api.harmonic_closeness(vertices, edges, sample=...)``
-    (Eppstein-Wang): the relaxation seeds only from |S| sampled
-    targets, pair state |S| x V instead of V x V; with S = V it
-    reduces to this exact query (cross-checked in tests/test_api.py)."""
+    At data-scale vertex counts, pass a target sample instead
+    (``graph_closeness_sampled``, Eppstein-Wang): pair state |S| x V
+    instead of V x V."""
+    from ezbake_graph_spark.api import harmonic_closeness
+
     edges = _nation_trade_edges(spark, sf_dir)
-    dist = edges.withColumn("d", F.lit(1))
-    n_pairs, sum_d = 0, 0
-    while True:
-        extended = (
-            dist.alias("r")
-            .join(edges.alias("e"), F.col("r.dst") == F.col("e.src"))
-            .select(
-                F.col("r.src").alias("src"),
-                F.col("e.dst").alias("dst"),
-                (F.col("r.d") + 1).alias("d"),
-            )
-        )
-        dist = (
-            dist.unionByName(extended)
-            .groupBy("src", "dst")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
-        )
-        stats = dist.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("d").alias("s")
-        ).collect()[0]
-        if (stats["n"], stats["s"]) == (n_pairs, sum_d):
-            break
-        n_pairs, sum_d = stats["n"], stats["s"]
-    micro = F.round(F.lit(1_000_000.0) / F.col("d")).cast("long")
     return (
-        dist.filter(F.col("src") != F.col("dst"))
-        .groupBy(F.col("src").alias("nation_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_reachable"),
-            (F.sum(micro).cast("double") / 1_000_000).alias("harmonic_centrality"),
+        harmonic_closeness(graph_vertices(edges), edges)
+        .select(
+            F.col("id").alias("nation_id"),
+            F.col("n_reached").alias("n_reachable"),
+            "harmonic_centrality",
         )
         .orderBy("nation_id")
     )
@@ -1873,13 +1843,13 @@ def graph_path_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat("path", F.array(F.col("dst"))).alias("path"),
             )
         )
-        frontier = (
+        frontier, seen = observed_checkpoint(
             ext.join(best.select("node"), "node", "left_anti")
             .groupBy("node")
-            .agg(F.lit(depth).alias("d"), F.min("path").alias("path"))
-            .localCheckpoint()
+            .agg(F.lit(depth).alias("d"), F.min("path").alias("path")),
+            rows=F.count(F.lit(1)),
         )
-        if not frontier.take(1):
+        if not seen["rows"]:
             break
         best = best.unionByName(frontier).localCheckpoint()
     return best.select(
@@ -1967,23 +1937,25 @@ def louvain_local_moves(
     # per-round overhead (measured 331 s -> 159 s on the 80-node
     # planted hierarchy test, 2x on the sf0.01 keys; identical integer
     # trajectory). Arcs cache dst-partitioned once so each round's kic
-    # join reuses the layout and only the small label frame shuffles;
-    # ``layout`` materializes them before counting, so a caller's arc
-    # frame (for louvain_two_level's coarse level, the whole coarsen
-    # chain) executes once.
-    weight = F.col(weight_col) if weight_col is not None else F.lit(1)
+    # join reuses the layout and only the small label frame shuffles.
     with LoopScope(edges_sym.sparkSession) as scope:
-        ew = scope.layout(
-            edges_sym.select("src", "dst", weight.cast("long").alias("_w")), "dst"
-        )
-        return _louvain_rounds(scope, ew, rounds, schedule)
+        arcs = scope.layout(_arcs(edges_sym, weight_col), "dst")
+        return _louvain_rounds(scope, arcs, rounds, schedule)
+
+
+def _arcs(edges_sym: DataFrame, weight_col: str | None) -> DataFrame:
+    """(src, dst, _w): the weighted arc frame every Louvain level runs
+    on, ``_w`` the BIGINT weight (1 when ``weight_col`` is None)."""
+    weight = F.col(weight_col) if weight_col is not None else F.lit(1)
+    return edges_sym.select("src", "dst", weight.cast("long").alias("_w"))
 
 
 def _louvain_rounds(
     scope: LoopScope, ew: DataFrame, rounds: int, schedule: str
 ) -> DataFrame:
-    """The local-move round loop over a cached weighted arc frame —
-    body of ``louvain_local_moves`` (see its contract)."""
+    """The local-move round loop over an arc frame laid out by
+    ``scope`` (``LoopScope.layout(arcs, "dst")``) — body of
+    ``louvain_local_moves`` (see its contract)."""
     # r13 (guide §1.2, VERDICT r12 #6): ``deg`` and ``m2`` are loop
     # INVARIANTS, but as lazy frames they re-aggregated from the edge
     # cache on every reference — deg twice per round (community totals
@@ -2307,18 +2279,15 @@ def louvain_two_level(
     community) where community is the LEVEL-2 label of the node's
     level-1 community.
     """
-    # r13: the caller's edge frame is consumed twice (level-1 moves +
-    # the coarsen join below); for the registered keys it is a full
-    # union+distinct over the fact table — materialize it once.
-    edges_sym = edges_sym.localCheckpoint(eager=True)
-    lvl1 = louvain_local_moves(edges_sym, rounds, weight_col)
-    w_in = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    ce = _coarsen(edges_sym.select("src", "dst", w_in.alias("_w")), lvl1)
-    lvl2 = louvain_local_moves(ce, rounds, weight_col="_w", schedule="updown")
+    # One scope for both levels: the level-1 arcs are materialized once
+    # (by ``layout``) and feed both the level-1 moves and the coarsen
+    # join; for the registered keys they are a full union+distinct over
+    # the fact table.
+    with LoopScope(edges_sym.sparkSession) as scope:
+        arcs = scope.layout(_arcs(edges_sym, weight_col), "dst")
+        lvl1 = _louvain_rounds(scope, arcs, rounds, "parity")
+        coarse = scope.layout(_coarsen(arcs, lvl1), "dst")
+        lvl2 = _louvain_rounds(scope, coarse, rounds, "updown")
     return _relabel(lvl1, lvl2)
 
 
@@ -2405,30 +2374,25 @@ def louvain_hierarchy(
     (``_coarsen`` and ``_relabel``, shared with ``louvain_two_level``);
     each level's graph is communities^2-bounded, so cost decays
     geometrically down the hierarchy. Per level there is ONE bounded
-    driver reduction (a 1-row modularity readout — the documented
-    convergence-check posture, never data-proportional).
+    driver reduction: a 1-row modularity readout, a join of the
+    intra-community weight with the community totals, never
+    data-proportional. The same row carries 2m (Σ_C tot_C), so no
+    separate read of the base graph runs.
 
     Output: (level, id, community, q_num, modularity), one row per
     base node per EMITTED level, level 1 rows always present.
     """
     if max_levels < 1:
         raise ValueError("louvain_hierarchy needs at least one level")
-    w_in = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    # One scope for the whole level loop: the per-level readouts (m2,
-    # the coarse-graph count, the modularity row) run with AQE off at
-    # the pinned width like the nested move rounds. With AQE on, its
-    # re-planning jobs vary in number from one identical call to the
-    # next, so the loop's job count would not be fixed.
-    with LoopScope(edges_sym.sparkSession):
-        base = edges_sym.select("src", "dst", w_in.alias("_w")).localCheckpoint(
-            eager=True
-        )
+    # One scope for the whole level loop: every level's arcs are laid
+    # out once and feed both its moves and its coarsen join, and the
+    # per-level readouts (the coarse-graph count, the modularity row)
+    # run with AQE off at the pinned width like the move rounds. With
+    # AQE on, its re-planning jobs vary in number from one identical
+    # call to the next, so the loop's job count would not be fixed.
+    with LoopScope(edges_sym.sparkSession) as scope:
+        base = scope.layout(_arcs(edges_sym, weight_col), "dst")
         deg = base.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("deg"))
-        m2 = base.agg(F.sum("_w")).collect()[0][0]
         g = base
         mem: DataFrame | None = None
         prev_q: int | None = None
@@ -2440,11 +2404,8 @@ def louvain_hierarchy(
                 # and q_k == q_{k-1} — the oracle's strict-gain gate drops
                 # the level either way; skip the wasted kernel run.
                 break
-            labels = louvain_local_moves(
-                g,
-                rounds,
-                weight_col="_w",
-                schedule="parity" if lvl == 1 else "updown",
+            labels = _louvain_rounds(
+                scope, g, rounds, "parity" if lvl == 1 else "updown"
             )
             mem = labels if mem is None else _relabel(mem, labels)
             mem = mem.localCheckpoint(eager=True)
@@ -2468,9 +2429,13 @@ def louvain_hierarchy(
                 mem.join(deg, "id")
                 .groupBy("community")
                 .agg(F.sum("deg").alias("tot"))
-                .agg(F.sum(F.col("tot") * F.col("tot")).alias("s2"))
+                .agg(
+                    F.sum(F.col("tot") * F.col("tot")).alias("s2"),
+                    F.sum("tot").alias("m2"),  # Σ_C tot_C = Σ deg = 2m
+                )
             )
             row = intra.crossJoin(tots).collect()[0]
+            m2 = row["m2"]
             q = m2 * row["intra"] - row["s2"]
             if lvl >= 2 and prev_q is not None and q <= prev_q:
                 break  # no integer modularity gain: hierarchy converged
@@ -2486,7 +2451,7 @@ def louvain_hierarchy(
             )
             out = lvl_df if out is None else out.unionByName(lvl_df)
             if lvl < max_levels:
-                g = _coarsen(g, labels).localCheckpoint(eager=True)
+                g = scope.layout(_coarsen(g, labels), "dst")
         return out
 
 
@@ -2682,7 +2647,7 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading; suppliers have no out-edges so their hub is exactly 0,
     and vice versa). Plan shape per superstep: ``_hits_walk``, the
     loop pregel.hits runs — two keyed join+grouped sums, each raw sum
-    checkpointed once, plus two 1-row totals broadcast back. BIGINT
+    checkpointed once with its total observed on that job. BIGINT
     bound: ``raw * 1e6`` needs Σhub_micro * 1e6 < 9.2e18, i.e. < 9.2e12
     micro-mass — after the first normalization the L1 mass is ≤ 1e6,
     so only superstep 1's raw (n_parts * 1e6) binds: safe below ~9e12
@@ -2944,38 +2909,6 @@ _TRUSS_K = 4
 _TRUSS_ROUNDS = 24  # measured peeling depth 2/17/4 at sf0.001/0.01/0.1
 
 
-
-def _checkpoint_reset_stats(df: DataFrame) -> DataFrame:
-    """localCheckpoint + STATISTICS reset — required in any loop whose
-    superstep multiplies plan-size estimates, i.e. 2+ self-joins per
-    round. ``Dataset.localCheckpoint`` truncates lineage but INHERITS
-    the parent plan's ``sizeInBytes`` into the new LogicalRDD, and the
-    size-only join estimator multiplies child sizes — so a round with
-    J joins makes size_{n+1} ~ size_n^(J+1). The BigInteger's DIGIT
-    count then grows (J+1)x per round and the driver disappears into
-    Karatsuba/Toom-Cook multiplications: measured on the 4-truss loop
-    (3 self-joins/round), rounds 0-11 ran 0.4-1.6 s and rounds
-    12/13/14 ran 6/25/127 s with a CONSTANT 33-char logical plan and
-    SHRINKING data — jstack pinned 107 s of the 115-s wall on
-    ``java.math.BigInteger.multiply``. Two-join loops (WCC, SSSP)
-    square per round and stay under the radar only because they
-    converge in <= ~10 rounds (19 x 2^10 digits is still cheap) —
-    the hazard is latent there, structural here.
-
-    The reset rebuilds a LogicalRDD over the SAME materialized
-    partitions without the inherited stats (back to
-    ``defaultSizeInBytes``), so estimates stay constant-size forever.
-    Everything remains JVM-side and distributed — no python round
-    trip."""
-    ck = df.localCheckpoint(eager=True)
-    jdf = ck._jdf
-    spark = df.sparkSession
-    jds = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
-    )
-    return DataFrame(jds, spark)
-
-
 def _truss_sql(rounds: int = _TRUSS_ROUNDS, k: int = _TRUSS_K) -> str:
     """Unrolled-CTE oracle for k-truss peeling: per round, edge
     support = common-neighbor count over the CURRENT edge set; keep
@@ -3100,18 +3033,21 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     edges = eall.filter(keep)
+    # Each round's state is _detached: its support self-joins would
+    # otherwise multiply the sizes it inherits, round after round.
+    rows = F.count(F.lit(1))
     with LoopScope(spark, divisor=4):
-        cur = _checkpoint_reset_stats(edges)
-        n_cur = cur.count()
+        cur, seen = observed_checkpoint(edges, rows=rows)
+        cur, n_cur = _detached(cur), seen["rows"]
         for _ in range(_TRUSS_ROUNDS):
-            nxt = _checkpoint_reset_stats(
+            cur, seen = observed_checkpoint(
                 _truss_support(cur)
                 .filter(F.col("support") >= _TRUSS_K - 2)
-                .select("a", "b", "support")
+                .select("a", "b", "support"),
+                rows=rows,
             )
-            n_nxt = nxt.count()
-            cur = nxt
-            if n_nxt == n_cur:
+            cur = _detached(cur)
+            if seen["rows"] == n_cur:
                 # Converged: the round's input set C and its survivors
                 # nxt = {e in C : sup(e) >= k-2} have equal size, so
                 # nxt == C is the stable set and the support carried
@@ -3119,7 +3055,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # Emitting from the materialized frame reuses it
                 # instead of re-running the two triangle joins.
                 break
-            n_cur = n_nxt
+            n_cur = seen["rows"]
         else:
             # rounds exhausted without a fixpoint (never on committed
             # data: depth 2/17/4 vs the 24-round cap): the carried

@@ -149,8 +149,9 @@ _RECENTLY_CHANGED = (
     # LoopScope for every iterative loop, symmetrize() without its own
     # repartition, the shared _relax_min / _rank_walk / _hits_walk
     # bodies, Louvain's shared _coarsen / _relabel and louvain_hierarchy
-    # in one scope, the exact-rank edge build, and _clusters_from_pairs.
-    # Value-hash-oracled consumers only: with the five rows-only ones
+    # in one scope, the exact-rank edge build, and _clusters_from_pairs;
+    # then graph_closeness, now api.harmonic_closeness. Value-hash-
+    # oracled consumers only: with the five rows-only ones
     # (graph_pagerank, graph_ppr, graph_betweenness_sampled, graph_hits,
     # dedup_semdedup) the list would overrun half the window.
     "graph_wcc",
@@ -160,6 +161,7 @@ _RECENTLY_CHANGED = (
     "graph_temporal_reachability",
     "graph_labelprop",
     "graph_kcore",
+    "graph_closeness",
     "graph_assortativity",
     "graph_pagerank_exact",
     "graph_ppr_exact",

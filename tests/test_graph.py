@@ -408,6 +408,56 @@ def test_pregel_run_rejects_unknown_state_col(spark):
         pregel_run(verts, edges, F.col("x"), F.min, {"nope": F.col("x")})
 
 
+def test_observed_checkpoint_reads_empty_frames(spark):
+    """A scalar observed on the checkpoint of an empty frame, and of a
+    frame the optimizer folds to empty, reads 0 (a count) or None (a
+    sum) and returns instead of waiting for metrics that never come."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    from ezbake_graph_spark.graph.pregel import observed_checkpoint
+
+    empty = spark.createDataFrame([], "id long")
+    folded = spark.range(10).filter(F.lit(False))
+    with ThreadPoolExecutor(1) as pool:
+        for df in (empty, folded):
+            run = pool.submit(
+                observed_checkpoint, df, rows=F.count(F.lit(1)), total=F.sum("id")
+            )
+            ck, seen = run.result(timeout=120)
+            assert seen == {"rows": 0, "total": None}
+            assert ck.count() == 0
+
+
+def test_observed_checkpoint_aggregates_before_the_projection(spark):
+    """Positional columns project the checkpoint; the aggregates still
+    see every column of the frame before that projection."""
+    from pyspark.sql import functions as F
+
+    from ezbake_graph_spark.graph.pregel import observed_checkpoint
+
+    df = spark.range(5).withColumn("old", F.col("id") % 2)
+    ck, seen = observed_checkpoint(df, "id", odd=F.sum("old"))
+    assert ck.columns == ["id"]
+    assert seen == {"odd": 2}
+    assert sorted(r["id"] for r in ck.collect()) == list(range(5))
+
+
+def test_betweenness_sampled_absent_source_is_all_zero(spark):
+    """A sample whose only source is no vertex leaves BFS level 0 empty:
+    every vertex scores 0.0 and no superstep runs."""
+    from ezbake_graph_spark import api
+
+    v = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
+    got = {
+        r["id"]: r["betweenness"]
+        for r in api.betweenness_sampled(v, e, sources=[99]).collect()
+    }
+    assert got == dict.fromkeys(range(4), 0.0)
+
+
 def test_betweenness_sampled_matches_python_brandes(spark):
     """betweenness_sampled (all vertices as sources = exact) vs a
     pure-Python Brandes on a non-trivial graph with branching,

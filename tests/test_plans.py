@@ -381,30 +381,33 @@ def _warm_jobs(spark, run) -> int:
     return len([j for j in st.getJobIdsForGroup(None) if j not in before])
 
 
-# Jobs one warm call schedules at sf0.001, measured before the graph
-# loops moved onto LoopScope (the same at 4 and 32 cores). A lifecycle
-# change that adds a sizing count, a materialization or an extra probe
-# per superstep shows up here before it shows up in wall time. The
-# delta min-relaxation loops (bfs, sssp, temporal reachability and the
-# dedup clustering) are pinned at their counts before they shared one
-# body; graph_bfs at 18, one probe fewer than its old
-# frontier-then-probe loop (19). HITS and the Louvain keys are pinned
-# at their counts before they shared ``_hits_walk`` and
-# ``_coarsen``/``_relabel``. graph_louvain_hierarchy is pinned at its
-# count once its level loop ran in one LoopScope: 38 on every warm
-# call at 4 and 32 cores (47 or 48 from call to call with AQE on).
+# Jobs one warm call schedules at sf0.001 (the same at 4 and 32 cores).
+# A lifecycle change that adds a sizing count, a materialization or a
+# probe per superstep shows up here before it shows up in wall time.
+# Each count is pinned where reading every per-superstep scalar off the
+# superstep's own checkpoint job (observed_checkpoint) left it, with
+# the layouts detached so Louvain's loop caches are hit; every pin but
+# graph_pagerank_exact's (the control: its lazy chain reads nothing
+# mid-loop) sat above it before, e.g. graph_wcc 15, graph_hits 128,
+# graph_louvain 28.
 _LOOP_JOBS = {
-    "graph_wcc": 15,
+    "graph_wcc": 10,
     "graph_pagerank_exact": 12,
-    "graph_hits_exact": 41,
-    "graph_bfs": 18,
-    "graph_sssp": 18,
-    "graph_temporal_reachability": 23,
-    "dedup_cluster_canonical": 17,
-    "graph_hits": 128,
-    "graph_louvain": 28,
-    "graph_louvain_two_level": 42,
-    "graph_louvain_hierarchy": 38,
+    "graph_hits_exact": 28,
+    "graph_bfs": 12,
+    "graph_sssp": 13,
+    "graph_temporal_reachability": 17,
+    "dedup_cluster_canonical": 13,
+    "graph_hits": 85,
+    "graph_kcore": 10,
+    "graph_ktruss": 6,
+    "graph_scc": 23,
+    "graph_closeness": 22,
+    "graph_betweenness_sampled": 32,
+    "graph_louvain": 18,
+    "graph_louvain_weighted": 18,
+    "graph_louvain_two_level": 36,
+    "graph_louvain_hierarchy": 26,
 }
 
 
@@ -416,11 +419,11 @@ def test_graph_loop_job_count_pinned(spark, key):
 
 
 def test_pregel_run_probe_costs_no_more_than_connected_components(spark):
-    """pregel_run's convergence probe scans a change flag written by
-    the superstep's own update, like connected_components' does: a
-    warm pregel_run WCC schedules no more jobs than the named kernel
-    on the same graph. A probe that joins new state against old costs
-    an extra job per superstep (15 vs 13 at sf0.001)."""
+    """pregel_run counts its changes on the superstep's own checkpoint
+    job, like connected_components does: a warm pregel_run WCC
+    schedules no more jobs than the named kernel on the same graph. A
+    probe that joins new state against old costs an extra job per
+    superstep."""
     from pyspark.sql import functions as F
 
     from ezbake_graph_spark.graph.pregel import connected_components, pregel_run
