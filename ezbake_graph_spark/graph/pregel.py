@@ -49,12 +49,10 @@ class LoopScope:
       200-partition shuffles into the edge build; without the pin,
       every superstep's groupBy/window runs at the session default
       (measured: sf0.01 core_number 23 s unpinned vs 8 s pinned).
-    - ``divisor`` picks the provisional width,
-      ``max(4, min(session partitions, defaultParallelism) // divisor)``.
-      Loops that size by edge volume keep ``divisor=1`` and tighten the
-      width in ``layout``; the exact-integer loops of
-      ``operators/graph.py`` pass ``divisor=4`` and never count, which
-      saves the sizing jobs on every call.
+    - The provisional width is
+      ``max(4, min(session partitions, defaultParallelism))``; ``fit``
+      tightens it to a row count the loop has already observed (the
+      one sizing rule; ``layout`` applies it to its edge count).
     - ``layout`` builds the loop's resident edge layout; ``cache``
       registers any other loop-scoped cache (loop invariants, a second
       edge layout keyed the other way).
@@ -87,9 +85,8 @@ class LoopScope:
     final step stays eager so execution happens inside the scope.
     """
 
-    def __init__(self, spark: SparkSession, divisor: int = 1):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.divisor = divisor
         self._caches: list[DataFrame] = []
 
     def __enter__(self) -> LoopScope:
@@ -98,7 +95,7 @@ class LoopScope:
         self._prev_part = conf.get("spark.sql.shuffle.partitions", "200")
         conf.set("spark.sql.adaptive.enabled", "false")
         width = min(int(self._prev_part), self.spark.sparkContext.defaultParallelism)
-        self._pin(max(4, width // self.divisor))
+        self._pin(max(4, width))
         return self
 
     def __exit__(self, *exc) -> None:
@@ -110,6 +107,17 @@ class LoopScope:
     def _pin(self, n: int) -> None:
         self.partitions = n
         self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
+
+    def fit(self, rows: int) -> None:
+        """Pin the width for ``rows`` edge rows, ~250k rows per task,
+        clamped to the provisional width: a superstep runs dozens of
+        tiny stages, so over-partitioning a small graph buys nothing
+        and pays task-scheduling overhead per superstep (measured ~2x
+        on the sf0.1 graph: 32 -> 8 partitions halves PageRank). At
+        100 TB edge counts push this to the clamp, i.e. full cluster
+        parallelism. ``rows`` must be a count the loop already has (an
+        observed checkpoint's), never a count job of its own."""
+        self._pin(max(4, min(self.partitions, rows // 250_000 + 1)))
 
     def cache(self, df: DataFrame) -> DataFrame:
         """``df.cache()``, unpersisted when the scope exits."""
@@ -135,19 +143,11 @@ class LoopScope:
         layout are hit. A localCheckpoint's blocks are released by the
         ContextCleaner when the plan goes unreachable, and the cache is
         dropped at scope exit, so memory is bounded and every run pays
-        its own materialization.
-
-        The width is sized to edge volume (~250k edge rows per task),
-        clamped to the provisional width, and pinned for the rest of
-        the loop: a superstep runs dozens of tiny stages, so
-        over-partitioning a small graph buys nothing and pays
-        task-scheduling overhead per superstep (measured ~2x on the
-        sf0.1 graph: 32 -> 8 partitions halves PageRank). At 100 TB
-        edge counts push this to the clamp, i.e. full cluster
-        parallelism.
+        its own materialization. The observed count ``fit``s the
+        width, pinned for the rest of the loop.
         """
         df, seen = observed_checkpoint(df, rows=F.count(F.lit(1)))
-        self._pin(max(4, min(self.partitions, seen["rows"] // 250_000 + 1)))
+        self.fit(seen["rows"])
         return self.cache(_detached(df).repartition(self.partitions, *keys))
 
 

@@ -980,25 +980,27 @@ def _exact_rank_edges(
     spark: SparkSession, sf_dir: str, scope: LoopScope
 ) -> tuple[DataFrame, DataFrame]:
     """Edge build shared by the exact-integer PageRank loops: ``sym``,
-    the symmetrized part-supplier edges, and ``sym_d`` = (src, dst, d),
-    ``sym`` cached src-partitioned at the scope's width with each
-    source's degree ``d`` attached.
+    the symmetrized part-supplier edges as the scope's src-partitioned
+    ``layout``, and ``sym_d`` = (src, dst, d), ``sym`` with each
+    source's degree ``d`` attached, cached.
 
     The degree rides on the cached edges, so a superstep's shares need
     one join instead of two, and every message join shuffles ONLY the
     vertex-state side — the |E|-row edge relation never moves again
-    (shares are the identical integer ``r div d``). The cache is
+    (shares are the identical integer ``r div d``). ``d`` is a count(*)
+    WINDOW over the layout's src partitioning, so it adds no exchange;
+    an exact integer count, bit-identical ranks. Both caches are
     loop-scoped: dropped at scope exit, so every run pays its own
-    build. ``d`` is a count(*) WINDOW over the src partitioning the
-    cache needs anyway — ONE exchange, versus a degree aggregate, a
-    join and a repartition (three); exact integer count, bit-identical
-    ranks (same-session A/B: 3.66 → 3.22 s, rows equal)."""
+    build."""
     edges = bipartite_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    sym = scope.layout(
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ),
+        "src",
     )
     sym_d = scope.cache(
-        sym.repartition(scope.partitions, "src").select(
+        sym.select(
             "src",
             "dst",
             F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
@@ -1028,13 +1030,14 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so no dangling-mass term is needed.
 
     Loop mechanics (round-5 tune, 6.3 s → 2.9 s first-run at sf0.01):
-    runs in a ``LoopScope(divisor=4)`` (AQE off + small pinned shuffle,
-    no sizing count), mid-loop checkpoints LAZY (lineage truncation
-    without a materialization job each — the whole 10-step chain
-    executes as one job at the closing eager checkpoint, inside the
-    scope). The per-superstep ``state ⨝ deg`` join is folded into the
-    degree-decorated edge cache (``_exact_rank_edges``)."""
-    with LoopScope(spark, divisor=4) as scope:
+    runs in a ``LoopScope`` (AQE off, width fitted to the edge count
+    the layout observes on its own checkpoint job), mid-loop
+    checkpoints LAZY (lineage truncation without a materialization job
+    each — the whole 10-step chain executes as one job at the closing
+    eager checkpoint, inside the scope). The per-superstep
+    ``state ⨝ deg`` join is folded into the degree-decorated edge
+    cache (``_exact_rank_edges``)."""
+    with LoopScope(spark) as scope:
         sym, sym_d = _exact_rank_edges(spark, sf_dir, scope)
         state = (
             sym.select(F.col("src").alias("id")).distinct()
@@ -1114,9 +1117,10 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring with a full value-hash oracle. Vertices never reached keep
     rank 0 and are filtered, mirroring sparse PPR at scale (frontier
     stays small; state ∝ touched vertices, not |V|). Same loop
-    mechanics as graph_pagerank_exact: pinned scope, one-time deg
-    checkpoint, lazy mid-loop checkpoints, eager closing checkpoint."""
-    with LoopScope(spark, divisor=4) as scope:
+    mechanics as graph_pagerank_exact: the degree-decorated layout of
+    ``_exact_rank_edges``, lazy mid-loop checkpoints, eager closing
+    checkpoint."""
+    with LoopScope(spark) as scope:
         sym, sym_d = _exact_rank_edges(spark, sf_dir, scope)
         verts = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
         state = verts.withColumn(
@@ -1604,6 +1608,26 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BETWEENNESS_DEPTH = 6
 _BETWEENNESS_TOP_EDGES = 80
 
+
+def _top_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): the top-80 nation trade edges by order-line count
+    (deterministic (n DESC, src, dst) cut — the complete trade graph
+    has every distance 1), symmetrized and deduplicated, checkpointed
+    to truncate the 4-table derivation's lineage (bounded: <= 2x the
+    top edges)."""
+    top = (
+        _nation_trade_weighted(spark, sf_dir)
+        .orderBy(F.col("n").desc(), "src", "dst")
+        .limit(_BETWEENNESS_TOP_EDGES)
+        .select("src", "dst")
+    )
+    return (
+        top.unionByName(top.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
 _BETWEENNESS_EXACT_SQL = f"""
 WITH weighted AS (
   SELECT c_nationkey AS src, s_nationkey AS dst, count(*) AS n
@@ -1614,7 +1638,7 @@ WITH weighted AS (
 ), top_edges AS (
   SELECT src, dst FROM weighted
   ORDER BY n DESC, src, dst LIMIT {_BETWEENNESS_TOP_EDGES}
-), und AS (
+), und AS MATERIALIZED (
   SELECT src, dst FROM top_edges UNION SELECT dst, src FROM top_edges
 ), verts AS (SELECT DISTINCT src AS v FROM und),
 w1 AS (SELECT src, dst, CAST(1 AS BIGINT) AS cnt FROM und),
@@ -1662,9 +1686,9 @@ def graph_betweenness_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     float Brandes kernel, the same regime as
     ``graph_pagerank_exact``/``graph_ppr_exact``.
 
-    Graph: the top-80 nation trade edges by order-line count
-    (deterministic (n DESC, src, dst) cut — the complete trade graph
-    has every distance 1 and all-zero betweenness), symmetrized.
+    Graph: ``_top_trade_graph``, the symmetrized top-80 nation trade
+    edges (the complete trade graph has every distance 1 and all-zero
+    betweenness).
     Formulation: the pair-counting identity instead of Brandes'
     backward pass — sigma_st(v) = [d(s,v)+d(v,t)=d(s,t)] *
     sigma_sv * sigma_vt, so bc(v) = sum over ordered pairs of
@@ -1684,17 +1708,7 @@ def graph_betweenness_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     For data-scale vertex sets use ``api.betweenness_sampled`` — the
     O(|S| x diameter) Pregel path; this key exists to certify values.
     """
-    w = _nation_trade_weighted(spark, sf_dir)
-    top = (
-        w.orderBy(F.col("n").desc(), "src", "dst")
-        .limit(_BETWEENNESS_TOP_EDGES)
-        .select("src", "dst")
-    )
-    und = (
-        top.unionByName(top.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint()  # bounded (<= 2x top edges); truncate lineage
-    )
+    und = _top_trade_graph(spark, sf_dir)
     verts = und.select(F.col("src").alias("v")).distinct()
     level = und.select("src", "dst", F.lit(1).cast("long").alias("cnt"))
     walks = level.withColumn("d", F.lit(1))
@@ -1816,19 +1830,7 @@ def graph_path_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the betweenness twin; the declared graph is dimension-
     bounded, the data-proportional stage is the 4-table edge
     derivation."""
-    w = _nation_trade_weighted(spark, sf_dir)
-    top = (
-        w.orderBy(F.col("n").desc(), "src", "dst")
-        .limit(_BETWEENNESS_TOP_EDGES)
-        .select("src", "dst")
-    )
-    und = (
-        top.unionByName(
-            top.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _top_trade_graph(spark, sf_dir)
     best = spark.createDataFrame(
         [(_PATH_SRC, 0, [_PATH_SRC])], "node long, d int, path array<long>"
     )
@@ -2653,16 +2655,15 @@ def graph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so only superstep 1's raw (n_parts * 1e6) binds: safe below ~9e12
     parts; pre-scale the init mass beyond that (chi2-style caveat).
     """
-    with LoopScope(spark, divisor=4) as scope:
-        edges = bipartite_edges(spark, sf_dir).localCheckpoint()
-        # r13 (guide §2.4 / the pregel.hits posture): both half-step
-        # joins co-locate against a resident layout — edges cached
-        # src-partitioned AND dst-partitioned at the pinned count, so
-        # only the score side ever shuffles. Dropped at scope exit
-        # (VERDICT r12 #8), so every run pays the decorate cost.
-        by_src = scope.cache(edges.repartition(scope.partitions, "src"))
-        by_dst = scope.cache(edges.repartition(scope.partitions, "dst"))
-        verts = graph_vertices(edges)
+    with LoopScope(spark) as scope:
+        # The pregel.hits placement: both half-step joins co-locate
+        # against a resident layout, the edges src-partitioned AND
+        # dst-partitioned at the fitted width, so only the score side
+        # ever shuffles. Dropped at scope exit, so every run pays the
+        # layout cost.
+        by_src = scope.layout(bipartite_edges(spark, sf_dir), "src")
+        by_dst = scope.cache(by_src.repartition(scope.partitions, "dst"))
+        verts = graph_vertices(by_src)
         hub0 = verts.select("id", F.lit(1_000_000).cast("long").alias("hub"))
         hub, auth = _hits_walk(
             by_src, by_dst, hub0, HITS_EXACT_ITERS, F.expr("(raw * 1000000) div t")
@@ -2733,6 +2734,28 @@ def _temporal_sql(rounds: int = _TEMPORAL_ROUNDS) -> str:
     )
 
 
+def _event_contacts(ev: DataFrame) -> DataFrame:
+    """(src, dst, t) temporal contacts fabricated from ``events``:
+    within each props-k channel, the PREVIOUS actor (by µs timestamp,
+    then event id) links to the current one at the current timestamp;
+    self-contacts and channel starts are dropped."""
+    w = Window.partitionBy("k").orderBy("t", "event_id")
+    return (
+        ev.select(
+            "user_id",
+            F.unix_micros("ts").alias("t"),
+            "event_id",
+            F.get_json_object("props", "$.k").cast("int").alias("k"),
+        )
+        .select(
+            F.lag("user_id").over(w).alias("src"),
+            F.col("user_id").alias("dst"),
+            "t",
+        )
+        .filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
+    )
+
+
 @register(
     "graph_temporal_reachability",
     oracle=_temporal_sql(),
@@ -2767,21 +2790,7 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ezbake_graph_spark.graph.pregel import temporal_earliest_arrival
 
     ev = tables.load(spark, sf_dir, "events")
-    s = ev.select(
-        "user_id",
-        F.unix_micros("ts").alias("t"),
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-    )
-    w = Window.partitionBy("k").orderBy("t", "event_id")
-    contacts = (
-        s.select(
-            F.lag("user_id").over(w).alias("src"),
-            F.col("user_id").alias("dst"),
-            "t",
-        )
-        .filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
-    )
+    contacts = _event_contacts(ev)
     seed = ev.agg(F.min("user_id")).collect()[0][0]
     # The seed must ALWAYS be a vertex: the oracle's d0 emits
     # (seed, 0) unconditionally, but a contact-isolated seed (sole or
@@ -2997,19 +3006,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by current-edge adjacency, and rounds-to-stable is the
     usual truss-decomposition trade documented in the literature —
     all integers end to end."""
-    ev = tables.load(spark, sf_dir, "events")
-    us = F.unix_micros("ts")
-    w = Window.partitionBy("k").orderBy("t", "event_id")
-    s = ev.select(
-        "user_id",
-        us.alias("t"),
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-    )
-    c = s.select(
-        F.lag("user_id").over(w).alias("src"),
-        F.col("user_id").alias("dst"),
-    ).filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
+    c = _event_contacts(tables.load(spark, sf_dir, "events"))
     eall = c.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).distinct()
@@ -3036,9 +3033,10 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each round's state is _detached: its support self-joins would
     # otherwise multiply the sizes it inherits, round after round.
     rows = F.count(F.lit(1))
-    with LoopScope(spark, divisor=4):
+    with LoopScope(spark) as scope:
         cur, seen = observed_checkpoint(edges, rows=rows)
         cur, n_cur = _detached(cur), seen["rows"]
+        scope.fit(n_cur)
         for _ in range(_TRUSS_ROUNDS):
             cur, seen = observed_checkpoint(
                 _truss_support(cur)

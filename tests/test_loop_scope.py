@@ -127,3 +127,17 @@ def test_loop_leaves_session_as_found(spark, monkeypatch, name):
     with pytest.raises(_Injected):
         run(spark).collect()
     assert _session_state(spark) == before, "exception path"
+
+
+def test_fit_sizes_the_width_by_rows(spark):
+    """The one width rule: ~250k rows per task, at least 4 and at most
+    the provisional width the scope pinned on entry."""
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    provisional = max(4, min(session, spark.sparkContext.defaultParallelism))
+    with pregel.LoopScope(spark) as scope:
+        assert scope.partitions == provisional
+        scope.fit(10**12)
+        assert scope.partitions == provisional
+        scope.fit(1_000)
+        assert scope.partitions == 4
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"

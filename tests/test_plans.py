@@ -386,14 +386,18 @@ def _warm_jobs(spark, run) -> int:
 # probe per superstep shows up here before it shows up in wall time.
 # Each count is pinned where reading every per-superstep scalar off the
 # superstep's own checkpoint job (observed_checkpoint) left it, with
-# the layouts detached so Louvain's loop caches are hit; every pin but
-# graph_pagerank_exact's (the control: its lazy chain reads nothing
-# mid-loop) sat above it before, e.g. graph_wcc 15, graph_hits 128,
-# graph_louvain 28.
+# the layouts detached so Louvain's loop caches are hit (before:
+# graph_wcc 15, graph_hits 128, graph_louvain 28). The exact PageRank
+# loops read nothing mid-loop; they fell to 6 (graph_pagerank_exact
+# from 12, graph_ppr_exact from 9) once their edges moved onto the
+# detached layout: the old edge cache kept its source plan's size
+# estimate, under the broadcast threshold, so every superstep's shares
+# join broadcast the whole edge cache in a job of its own.
 _LOOP_JOBS = {
     "graph_wcc": 10,
-    "graph_pagerank_exact": 12,
-    "graph_hits_exact": 28,
+    "graph_pagerank_exact": 6,
+    "graph_ppr_exact": 6,
+    "graph_hits_exact": 26,
     "graph_bfs": 12,
     "graph_sssp": 13,
     "graph_temporal_reachability": 17,
