@@ -14,8 +14,9 @@ exit, also when a superstep raises. Vertex state is
 recompute; eager versus lazy: see ``LoopScope``).
 - One superstep body per loop family: the label-correcting loops
   (WCC, BFS, weighted SSSP, temporal earliest arrival) are one delta
-  min-relaxation, ``_relax_min``; PageRank and personalized PageRank
-  are one walk, ``_rank_walk``.
+  min-relaxation, ``_relax_min``; the four PageRank keys (float and
+  exact-integer PageRank and personalized PageRank) are one walk,
+  ``_rank_walk``.
 - A loop reads a scalar of its state (a changed count, a row count,
   an L1 total) one way: ``observed_checkpoint`` takes it off the
   superstep's own eager checkpoint job, never a probe job or a
@@ -24,7 +25,7 @@ recompute; eager versus lazy: see ``LoopScope``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -143,11 +144,13 @@ class LoopScope:
         layout are hit. A localCheckpoint's blocks are released by the
         ContextCleaner when the plan goes unreachable, and the cache is
         dropped at scope exit, so memory is bounded and every run pays
-        its own materialization. The observed count ``fit``s the
-        width, pinned for the rest of the loop.
+        its own materialization. The observed count, kept as ``rows``
+        until the next layout, ``fit``s the width, pinned for the rest
+        of the loop.
         """
         df, seen = observed_checkpoint(df, rows=F.count(F.lit(1)))
-        self.fit(seen["rows"])
+        self.rows = seen["rows"]
+        self.fit(self.rows)
         return self.cache(_detached(df).repartition(self.partitions, *keys))
 
 
@@ -306,42 +309,55 @@ def _rank_walk(
     vertices: DataFrame,
     edges: DataFrame,
     rank0: Column,
-    teleport: Column,
+    share: Column,
+    update: Column,
     iterations: int,
-    damping: float,
 ) -> DataFrame:
-    """The PageRank superstep, fixed ``iterations`` on the symmetrized
-    graph: rank' = teleport + damping · Σ rank(src)/deg(src). ``rank0``
-    and ``teleport`` are per-vertex Columns over ``id``. Dangling
-    vertices (degree 0) send nothing and keep the teleport mass only.
-    Returns (id, rank)."""
+    """The one PageRank superstep, run ``iterations`` times on the
+    symmetrized graph (float and exact-integer PageRank and PPR)::
+
+        c    = (state ⨝ sym_d ON id = src).groupBy(dst).sum(share)
+        rank = update
+
+    ``rank0`` is a Column over ``id``, ``share`` one over the sender's
+    ``rank`` and degree ``d``, ``update`` one over ``id`` and ``c``.
+    ``sym_d`` is the src-partitioned layout with each source's degree
+    attached by a count(*) window over that partitioning (no exchange),
+    cached, so a superstep is one join and one exchange: only the
+    vertex-state side moves. The state holds the layout's vertices;
+    every one receives (the layout is symmetric). Only the last
+    superstep left-joins ``vertices``, with ``c`` 0 where nothing
+    arrived, so a vertex without edges keeps the teleport mass only.
+
+    Every third superstep checkpoints lazily (lineage truncation
+    without a job of its own) and the last eagerly, so the whole chain
+    executes as one job inside the scope. Returns (id, rank).
+    """
+    if iterations < 1:
+        raise ValueError("PageRank needs at least one superstep")
     with LoopScope(edges.sparkSession) as scope:
         sym = scope.layout(symmetrize(edges), "src")
-        deg = sym.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
+        sym_d = scope.cache(
+            sym.withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("src")))
         )
-        state = vertices.join(deg, "id", "left").select(
-            "id",
-            F.coalesce(F.col("deg"), F.lit(0)).alias("deg"),
-            rank0.alias("rank"),
+        state = sym_d.select(F.col("src").alias("id")).distinct().select(
+            "id", rank0.alias("rank")
         )
-        for step in range(iterations):
-            contribs = (
-                sym.join(state, sym.src == state.id)
-                .filter(F.col("deg") > 0)
+        for step in range(1, iterations + 1):
+            c = (
+                state.join(sym_d, F.col("id") == F.col("src"))
                 .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
+                .agg(F.sum(share).alias("c"))
             )
-            state = state.join(contribs, "id", "left").select(
-                "id",
-                "deg",
-                (
-                    teleport
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            state = state.localCheckpoint(eager=(step == iterations - 1))
-    return state.select("id", "rank")
+            last = step == iterations
+            if last:
+                c = vertices.select("id").join(c, "id", "left").select(
+                    "id", F.coalesce(F.col("c"), F.lit(0)).alias("c")
+                )
+            state = c.select("id", update.alias("rank"))
+            if last or step % 3 == 0:
+                state = state.localCheckpoint(eager=last)
+    return state
 
 
 def _hits_walk(
@@ -403,7 +419,12 @@ def pagerank(
     """
     n = vertices.count()
     return _rank_walk(
-        vertices, edges, F.lit(1.0 / n), F.lit((1.0 - damping) / n), iterations, damping
+        vertices,
+        edges,
+        F.lit(1.0 / n),
+        F.col("rank") / F.col("d"),
+        F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("c"),
+        iterations,
     )
 
 
@@ -529,7 +550,12 @@ def personalized_pagerank(
         F.col("id").isin(source_ids), F.lit(1.0 / len(source_ids))
     ).otherwise(F.lit(0.0))
     return _rank_walk(
-        vertices, edges, seed, (1.0 - damping) * seed, iterations, damping
+        vertices,
+        edges,
+        seed,
+        F.col("rank") / F.col("d"),
+        (1.0 - damping) * seed + F.lit(damping) * F.col("c"),
+        iterations,
     )
 
 

@@ -30,6 +30,7 @@ from ezbake_graph_spark.graph.pregel import (
     LoopScope,
     _detached,
     _hits_walk,
+    _rank_walk,
     observed_checkpoint,
 )
 from ezbake_graph_spark.registry import register
@@ -225,8 +226,8 @@ def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("graph_pagerank", oracle=None, tags=("J7", "pregel", "rows-only"))
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (J7), 10 fixed supersteps, damping 0.85 (rows-only:
-    float iteration drift, SURVEY §5.3 rule 5). Golden-checked against
-    networkx in tests."""
+    float iteration drift, SURVEY §5.3 rule 5). Golden-checked in tests
+    against a plain-Python reference of the same recurrence."""
     edges = bipartite_edges(spark, sf_dir)
     verts = graph_vertices(edges)
     pr = pagerank(verts, edges, iterations=10, damping=0.85)
@@ -976,39 +977,6 @@ def _pagerank_exact_sql() -> str:
     )
 
 
-def _exact_rank_edges(
-    spark: SparkSession, sf_dir: str, scope: LoopScope
-) -> tuple[DataFrame, DataFrame]:
-    """Edge build shared by the exact-integer PageRank loops: ``sym``,
-    the symmetrized part-supplier edges as the scope's src-partitioned
-    ``layout``, and ``sym_d`` = (src, dst, d), ``sym`` with each
-    source's degree ``d`` attached, cached.
-
-    The degree rides on the cached edges, so a superstep's shares need
-    one join instead of two, and every message join shuffles ONLY the
-    vertex-state side — the |E|-row edge relation never moves again
-    (shares are the identical integer ``r div d``). ``d`` is a count(*)
-    WINDOW over the layout's src partitioning, so it adds no exchange;
-    an exact integer count, bit-identical ranks. Both caches are
-    loop-scoped: dropped at scope exit, so every run pays its own
-    build."""
-    edges = bipartite_edges(spark, sf_dir)
-    sym = scope.layout(
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ),
-        "src",
-    )
-    sym_d = scope.cache(
-        sym.select(
-            "src",
-            "dst",
-            F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d"),
-        )
-    )
-    return sym, sym_d
-
-
 @register(
     "graph_pagerank_exact",
     oracle=_pagerank_exact_sql(),
@@ -1023,46 +991,22 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop, so summation order cannot matter and both engines
     produce bit-identical ranks; the one double division happens on
     output. Costs one quantization of 1e-6 per share per step vs the
-    float version — identical plan shape (per superstep: shares join +
-    grouped sum, the same two keyed shuffles as graph/pregel.py
-    pagerank), so the perf story transfers. 10 fixed supersteps on the
-    symmetrized part-supplier graph; every vertex has degree ≥ 1 by
-    construction, so no dangling-mass term is needed.
-
-    Loop mechanics (round-5 tune, 6.3 s → 2.9 s first-run at sf0.01):
-    runs in a ``LoopScope`` (AQE off, width fitted to the edge count
-    the layout observes on its own checkpoint job), mid-loop
-    checkpoints LAZY (lineage truncation without a materialization job
-    each — the whole 10-step chain executes as one job at the closing
-    eager checkpoint, inside the scope). The per-superstep
-    ``state ⨝ deg`` join is folded into the degree-decorated edge
-    cache (``_exact_rank_edges``)."""
-    with LoopScope(spark) as scope:
-        sym, sym_d = _exact_rank_edges(spark, sf_dir, scope)
-        state = (
-            sym.select(F.col("src").alias("id")).distinct()
-            .withColumn("r", F.lit(1_000_000).cast("long"))
-            .localCheckpoint()
-        )
-        for i in range(10):
-            shares = (
-                state.join(sym_d, state["id"] == sym_d["src"])
-                .select(F.col("dst").alias("id"), F.expr("r div d").alias("share"))
-            )
-            state = (
-                shares.groupBy("id")
-                .agg(
-                    (
-                        F.lit(150_000)
-                        + F.expr("(85 * sum(share)) div 100")
-                    ).alias("r")
-                )
-            )
-            if i % 3 == 2:
-                state = state.localCheckpoint(eager=False)
-        return state.select(
-            "id", (F.col("r").cast("double") / 1_000_000).alias("rank")
-        ).orderBy("id").localCheckpoint()
+    float version — the same superstep, ``pregel._rank_walk``, with
+    integer ``share`` and ``update`` columns. 10 fixed supersteps on
+    the symmetrized part-supplier graph; every vertex has degree ≥ 1 by
+    construction, so no dangling-mass term is needed."""
+    edges = bipartite_edges(spark, sf_dir)
+    pr = _rank_walk(
+        graph_vertices(edges),
+        edges,
+        F.lit(1_000_000).cast("long"),
+        F.expr("rank div d"),
+        F.lit(150_000) + F.expr("(85 * c) div 100"),
+        10,
+    )
+    return pr.select(
+        "id", (F.col("rank").cast("double") / 1_000_000).alias("rank")
+    ).orderBy("id")
 
 
 def _ppr_exact_sql(seed: int = 1, iterations: int = 10) -> str:
@@ -1114,44 +1058,26 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pure-integer regime as graph_pagerank_exact (M77): teleport
     mass returns only to the seed, shares are integer floor divisions,
     so both engines produce bit-identical micro-ranks — proximity
-    scoring with a full value-hash oracle. Vertices never reached keep
-    rank 0 and are filtered, mirroring sparse PPR at scale (frontier
-    stays small; state ∝ touched vertices, not |V|). Same loop
-    mechanics as graph_pagerank_exact: the degree-decorated layout of
-    ``_exact_rank_edges``, lazy mid-loop checkpoints, eager closing
-    checkpoint."""
-    with LoopScope(spark) as scope:
-        sym, sym_d = _exact_rank_edges(spark, sf_dir, scope)
-        verts = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
-        state = verts.withColumn(
-            "r",
-            F.when(F.col("id") == 1, F.lit(1_000_000)).otherwise(F.lit(0)).cast("long"),
-        )
-        for i in range(10):
-            acc = (
-                state.filter(F.col("r") > 0)
-                .join(sym_d, F.col("id") == sym_d["src"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.expr("r div d")).alias("acc"))
-            )
-            state = (
-                verts.join(acc, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.when(F.col("id") == 1, F.lit(150_000)).otherwise(F.lit(0))
-                        + F.expr("(85 * coalesce(acc, 0)) div 100")
-                    ).cast("long").alias("r"),
-                )
-            )
-            if i % 3 == 2:
-                state = state.localCheckpoint(eager=False)
-        return (
-            state.filter(F.col("r") > 0)
-            .select("id", (F.col("r").cast("double") / 1_000_000).alias("rank"))
-            .orderBy(F.col("rank").desc(), "id")
-            .localCheckpoint()
-        )
+    scoring with a full value-hash oracle. Same walk as
+    graph_pagerank_exact with the seed-only teleport; zero shares
+    change no integer sum, so unreached vertices need no message
+    filter. Vertices never reached keep rank 0 and are filtered from
+    the output."""
+    seed = (F.col("id") == 1).cast("long")
+    edges = bipartite_edges(spark, sf_dir)
+    pr = _rank_walk(
+        graph_vertices(edges),
+        edges,
+        seed * 1_000_000,
+        F.expr("rank div d"),
+        seed * 150_000 + F.expr("(85 * c) div 100"),
+        10,
+    )
+    return (
+        pr.filter(F.col("rank") > 0)
+        .select("id", (F.col("rank").cast("double") / 1_000_000).alias("rank"))
+        .orderBy(F.col("rank").desc(), "id")
+    )
 
 
 _WALK_STEPS = 4
@@ -1829,38 +1755,45 @@ def graph_path_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk enumeration lives only in the oracle). Depth-capped at 6
     like the betweenness twin; the declared graph is dimension-
     bounded, the data-proportional stage is the 4-table edge
-    derivation."""
-    und = _top_trade_graph(spark, sf_dir)
-    best = spark.createDataFrame(
-        [(_PATH_SRC, 0, [_PATH_SRC])], "node long, d int, path array<long>"
-    )
-    frontier = best
-    for depth in range(1, _PATH_DEPTH + 1):
-        ext = (
-            frontier.join(und, frontier.node == und.src)
-            .filter(~F.array_contains("path", F.col("dst")))
-            .select(
-                F.col("dst").alias("node"),
-                F.lit(depth).alias("d"),
-                F.concat("path", F.array(F.col("dst"))).alias("path"),
+    derivation. Edge derivation and frontier loop run in one
+    ``LoopScope`` (AQE off, so every call schedules the same jobs),
+    closed by an eager checkpoint inside it."""
+    with LoopScope(spark):
+        und = _top_trade_graph(spark, sf_dir)
+        best = spark.createDataFrame(
+            [(_PATH_SRC, 0, [_PATH_SRC])], "node long, d int, path array<long>"
+        )
+        frontier = best
+        for depth in range(1, _PATH_DEPTH + 1):
+            ext = (
+                frontier.join(und, frontier.node == und.src)
+                .filter(~F.array_contains("path", F.col("dst")))
+                .select(
+                    F.col("dst").alias("node"),
+                    F.lit(depth).alias("d"),
+                    F.concat("path", F.array(F.col("dst"))).alias("path"),
+                )
             )
+            frontier, seen = observed_checkpoint(
+                ext.join(best.select("node"), "node", "left_anti")
+                .groupBy("node")
+                .agg(F.lit(depth).alias("d"), F.min("path").alias("path")),
+                rows=F.count(F.lit(1)),
+            )
+            if not seen["rows"]:
+                break
+            best = best.unionByName(frontier).localCheckpoint()
+        return (
+            best.select(
+                "node",
+                "d",
+                F.concat_ws(">", F.transform("path", lambda x: x.cast("string"))).alias(
+                    "path_str"
+                ),
+            )
+            .orderBy("node")
+            .localCheckpoint()
         )
-        frontier, seen = observed_checkpoint(
-            ext.join(best.select("node"), "node", "left_anti")
-            .groupBy("node")
-            .agg(F.lit(depth).alias("d"), F.min("path").alias("path")),
-            rows=F.count(F.lit(1)),
-        )
-        if not seen["rows"]:
-            break
-        best = best.unionByName(frontier).localCheckpoint()
-    return best.select(
-        "node",
-        "d",
-        F.concat_ws(">", F.transform("path", lambda x: x.cast("string"))).alias(
-            "path_str"
-        ),
-    ).orderBy("node")
 
 
 @register(
@@ -2388,8 +2321,7 @@ def louvain_hierarchy(
         raise ValueError("louvain_hierarchy needs at least one level")
     # One scope for the whole level loop: every level's arcs are laid
     # out once and feed both its moves and its coarsen join, and the
-    # per-level readouts (the coarse-graph count, the modularity row)
-    # run with AQE off at the pinned width like the move rounds. With
+    # per-level modularity readout runs with AQE off at the pinned width like the move rounds. With
     # AQE on, its re-planning jobs vary in number from one identical
     # call to the next, so the loop's job count would not be fixed.
     with LoopScope(edges_sym.sparkSession) as scope:
@@ -2400,11 +2332,14 @@ def louvain_hierarchy(
         prev_q: int | None = None
         out: DataFrame | None = None
         for lvl in range(1, max_levels + 1):
-            if lvl > 1 and g.select("src").distinct().count() <= 1:
+            if lvl > 1 and scope.rows <= 1:
                 # Degenerate coarse graph (everything already one
                 # community): moves are the identity, so mem_k == mem_{k-1}
                 # and q_k == q_{k-1} — the oracle's strict-gain gate drops
-                # the level either way; skip the wasted kernel run.
+                # the level either way; skip the wasted kernel run. The
+                # arcs are symmetric and keyed by (src, dst), so at most
+                # one arc, the count its layout observed, means at most
+                # one community.
                 break
             labels = _louvain_rounds(
                 scope, g, rounds, "parity" if lvl == 1 else "updown"

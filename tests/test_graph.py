@@ -221,6 +221,53 @@ def test_ppr_golden(spark):
         assert abs(got[v] - r) < 1e-9, (v, got[v], r)
 
 
+def _graph_with_isolated_vertex(spark):
+    """A 5-cycle with one chord, plus vertex 9, which has no edge: as
+    (vertices, edges) frames and as the adjacency the references take."""
+    pairs = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 0), (0, 2)]
+    adj: dict[int, set[int]] = {v: set() for v in (0, 1, 2, 3, 4, 9)}
+    for a, b in pairs:
+        adj[a].add(b)
+        adj[b].add(a)
+    verts = spark.createDataFrame([(v,) for v in adj], "id long")
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    return verts, edges, adj
+
+
+def test_rank_walk_isolated_vertex_keeps_teleport_mass(spark):
+    """PageRank with an isolated vertex and PPR with an isolated seed
+    match their references on the same adjacency; the isolated vertex
+    holds exactly its teleport mass."""
+    from ezbake_graph_spark.graph.pregel import pagerank, personalized_pagerank
+
+    verts, edges, adj = _graph_with_isolated_vertex(spark)
+    for df, ref, teleport in (
+        (pagerank(verts, edges, iterations=4), _ref_pagerank(adj, iters=4), 0.15 / 6),
+        (
+            personalized_pagerank(verts, edges, [0, 9], iterations=4),
+            _ref_ppr(adj, {0, 9}, iters=4),
+            0.15 / 2,
+        ),
+    ):
+        got = {r["id"]: r["rank"] for r in df.collect()}
+        assert set(got) == set(ref)
+        for v, r in ref.items():
+            assert abs(got[v] - r) < 1e-12, (v, got[v], r)
+        assert abs(got[9] - teleport) < 1e-12
+
+
+def test_pagerank_and_ppr_reject_zero_iterations(spark):
+    """Zero supersteps is an error, as for ``hits``, not the start
+    ranks returned unchanged."""
+    from ezbake_graph_spark.graph.pregel import pagerank, personalized_pagerank
+
+    verts, edges, _ = _graph_with_isolated_vertex(spark)
+    with pytest.raises(ValueError, match="at least one superstep"):
+        pagerank(verts, edges, iterations=0)
+    with pytest.raises(ValueError, match="at least one superstep"):
+        personalized_pagerank(verts, edges, [0], iterations=0)
+
+
 def test_scc_golden_networkx(spark):
     """graph_scc must equal networkx strongly_connected_components on
     the same derived nation digraph."""

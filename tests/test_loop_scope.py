@@ -89,6 +89,7 @@ CONSUMERS = {
     "graph_ppr_exact": lambda s: ops.graph_ppr_exact(s, SF_SMOKE),
     "graph_hits_exact": lambda s: ops.graph_hits_exact(s, SF_SMOKE),
     "graph_ktruss": lambda s: ops.graph_ktruss(s, SF_SMOKE),
+    "graph_path_reconstruct": lambda s: ops.graph_path_reconstruct(s, SF_SMOKE),
 }
 
 
@@ -103,7 +104,7 @@ def _session_state(spark):
 @pytest.mark.parametrize("name", sorted(CONSUMERS))
 def test_loop_leaves_session_as_found(spark, monkeypatch, name):
     run = CONSUMERS[name]
-    for t in ("lineitem", "events"):
+    for t in ("lineitem", "events", "orders", "customer", "supplier"):
         tables.load(spark, SF_SMOKE, t)  # session-lifetime input caches
     df_cls = type(spark.range(1))
     real = df_cls.localCheckpoint

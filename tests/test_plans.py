@@ -392,11 +392,18 @@ def _warm_jobs(spark, run) -> int:
 # from 12, graph_ppr_exact from 9) once their edges moved onto the
 # detached layout: the old edge cache kept its source plan's size
 # estimate, under the broadcast threshold, so every superstep's shares
-# join broadcast the whole edge cache in a job of its own.
+# join broadcast the whole edge cache in a job of its own. All four
+# PageRank keys run one walk (pregel._rank_walk) whose whole chain of
+# supersteps executes as one job; the float keys fell from 11 and 6
+# when they moved onto it. graph_path_reconstruct runs in a LoopScope:
+# with AQE on, its count varied from one identical call to the next.
 _LOOP_JOBS = {
     "graph_wcc": 10,
+    "graph_pagerank": 10,
+    "graph_ppr": 5,
     "graph_pagerank_exact": 6,
     "graph_ppr_exact": 6,
+    "graph_path_reconstruct": 9,
     "graph_hits_exact": 26,
     "graph_bfs": 12,
     "graph_sssp": 13,
@@ -411,7 +418,7 @@ _LOOP_JOBS = {
     "graph_louvain": 18,
     "graph_louvain_weighted": 18,
     "graph_louvain_two_level": 36,
-    "graph_louvain_hierarchy": 26,
+    "graph_louvain_hierarchy": 25,
 }
 
 
