@@ -314,6 +314,7 @@ def harmonic_closeness(
     for _ in range(max_iter):
         extended = (
             dist.alias("r")
+            .hint("merge")
             .join(rev.alias("e"), F.col("r.v") == F.col("e.src"))
             .select("r.t", F.col("e.dst").alias("v"), (F.col("r.d") + 1).alias("d"))
         )

@@ -51,9 +51,14 @@ class LoopScope:
       every superstep's groupBy/window runs at the session default
       (measured: sf0.01 core_number 23 s unpinned vs 8 s pinned).
     - The provisional width is
-      ``max(4, min(session partitions, defaultParallelism))``; ``fit``
-      tightens it to a row count the loop has already observed (the
-      one sizing rule; ``layout`` applies it to its edge count).
+      ``min(session partitions, defaultParallelism)``; ``fit`` tightens
+      it to one task per 250k rows of a count the loop has already
+      observed (the one sizing rule; ``layout`` applies it to its edge
+      count). There is no floor: a 4-partition floor overrode the rule
+      on every graph under 750k edge rows. Dropping it, with the merge
+      join rule of ``_relax_min``, took a graph-iterative benchmark
+      pass (perfbench, scale 0.004, 4 vCPU) from 374 to 128 tasks and
+      its task CPU from 1.16 to 0.70 s (median of 10 A/B pairs).
     - ``layout`` builds the loop's resident edge layout; ``cache``
       registers any other loop-scoped cache (loop invariants, a second
       edge layout keyed the other way).
@@ -95,8 +100,10 @@ class LoopScope:
         self._prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
         self._prev_part = conf.get("spark.sql.shuffle.partitions", "200")
         conf.set("spark.sql.adaptive.enabled", "false")
-        width = min(int(self._prev_part), self.spark.sparkContext.defaultParallelism)
-        self._pin(max(4, width))
+        self._provisional = min(
+            int(self._prev_part), self.spark.sparkContext.defaultParallelism
+        )
+        self._pin(self._provisional)
         return self
 
     def __exit__(self, *exc) -> None:
@@ -110,15 +117,17 @@ class LoopScope:
         self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
 
     def fit(self, rows: int) -> None:
-        """Pin the width for ``rows`` edge rows, ~250k rows per task,
-        clamped to the provisional width: a superstep runs dozens of
-        tiny stages, so over-partitioning a small graph buys nothing
-        and pays task-scheduling overhead per superstep (measured ~2x
-        on the sf0.1 graph: 32 -> 8 partitions halves PageRank). At
-        100 TB edge counts push this to the clamp, i.e. full cluster
+        """Pin the width for ``rows`` edge rows: ``rows // 250_000 + 1``
+        tasks, at most the provisional width, at least one. A superstep
+        runs dozens of tiny stages, so over-partitioning a small graph
+        buys nothing and pays task-scheduling overhead per superstep
+        (measured ~2x on the sf0.1 graph: 32 -> 8 partitions halves
+        PageRank; the former 4-partition floor cost the same on every
+        graph under 750k rows, see the class docstring). At 100 TB edge
+        counts push this to the provisional width, i.e. full cluster
         parallelism. ``rows`` must be a count the loop already has (an
         observed checkpoint's), never a count job of its own."""
-        self._pin(max(4, min(self.partitions, rows // 250_000 + 1)))
+        self._pin(min(self._provisional, rows // 250_000 + 1))
 
     def cache(self, df: DataFrame) -> DataFrame:
         """``df.cache()``, unpersisted when the scope exits."""
@@ -250,9 +259,19 @@ def _relax_min(
     checkpointed state, so the next frontier is a filter of the
     materialized RDD, not a new⨝old join, and the stop test reads the
     flag's count off the checkpoint job (``observed_checkpoint``).
+
+    Join rule: ``edges ⨝ frontier`` is a sort-merge join, hinted on the
+    frontier side at this join site, so it reuses the layout's
+    partitioning and only the frontier shuffles. A checkpointed state
+    inherits the small size estimate of the plan that computed it, and
+    unhinted Spark broadcast it in a job of its own every superstep on
+    graphs whose state is under the broadcast threshold (at 100 TB the
+    state is far above it, so the plan there is the same). The hint
+    sits on the join, not on the checkpoint, so it does not leak into a
+    caller's first join after the loop.
     """
     for _ in range(max_iter):
-        sent = edges.join(frontier, edges.src == frontier.id)
+        sent = edges.join(frontier.hint("merge"), edges.src == frontier.id)
         if edge_filter is not None:
             sent = sent.filter(edge_filter)
         msgs = sent.groupBy(F.col("dst").alias("id")).agg(F.min(msg).alias("msg"))
@@ -306,13 +325,13 @@ def bfs(
 
 
 def _rank_walk(
-    vertices: DataFrame,
+    vertices: DataFrame | None,
     edges: DataFrame,
     rank0: Column,
     share: Column,
     update: Column,
     iterations: int,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """The one PageRank superstep, run ``iterations`` times on the
     symmetrized graph (float and exact-integer PageRank and PPR)::
 
@@ -321,17 +340,20 @@ def _rank_walk(
 
     ``rank0`` is a Column over ``id``, ``share`` one over the sender's
     ``rank`` and degree ``d``, ``update`` one over ``id`` and ``c``.
+    ``vertices`` may be None when every vertex has an edge.
     ``sym_d`` is the src-partitioned layout with each source's degree
     attached by a count(*) window over that partitioning (no exchange),
     cached, so a superstep is one join and one exchange: only the
     vertex-state side moves. The state holds the layout's vertices;
     every one receives (the layout is symmetric). Only the last
-    superstep left-joins ``vertices``, with ``c`` 0 where nothing
-    arrived, so a vertex without edges keeps the teleport mass only.
+    superstep left-joins ``vertices`` (skipped when None), with ``c`` 0
+    where nothing arrived, so a vertex without edges keeps the teleport
+    mass only.
 
     Every third superstep checkpoints lazily (lineage truncation
     without a job of its own) and the last eagerly, so the whole chain
-    executes as one job inside the scope. Returns (id, rank).
+    executes as one job inside the scope. Returns the (id, rank) frame
+    and its row count, observed on that job.
     """
     if iterations < 1:
         raise ValueError("PageRank needs at least one superstep")
@@ -350,14 +372,15 @@ def _rank_walk(
                 .agg(F.sum(share).alias("c"))
             )
             last = step == iterations
-            if last:
+            if last and vertices is not None:
                 c = vertices.select("id").join(c, "id", "left").select(
                     "id", F.coalesce(F.col("c"), F.lit(0)).alias("c")
                 )
             state = c.select("id", update.alias("rank"))
-            if last or step % 3 == 0:
-                state = state.localCheckpoint(eager=last)
-    return state
+            if step % 3 == 0 and not last:
+                state = state.localCheckpoint(eager=False)
+        state, seen = observed_checkpoint(state, rows=F.count(F.lit(1)))
+    return state, seen["rows"]
 
 
 def _hits_walk(
@@ -381,6 +404,10 @@ def _hits_walk(
     type: ``raw / t`` and ``(raw * 1000000) div t`` are the same
     operations they were on a 1-row total broadcast back, without that
     broadcast's build job.
+
+    Join rule: both half-step joins are sort-merge joins hinted on the
+    score side (``_relax_min`` gives the reason), so each co-locates
+    with its layout and no half-step schedules a broadcast job.
     """
 
     def normalized(raw: DataFrame, name: str) -> DataFrame:
@@ -391,13 +418,17 @@ def _hits_walk(
     auth = None
     for _ in range(iterations):
         auth = normalized(
-            by_src.join(hub.select(F.col("id").alias("src"), "hub"), "src")
+            by_src.join(
+                hub.select(F.col("id").alias("src"), "hub").hint("merge"), "src"
+            )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("hub").alias("raw")),
             "auth",
         )
         hub = normalized(
-            by_dst.join(auth.select(F.col("id").alias("dst"), "auth"), "dst")
+            by_dst.join(
+                auth.select(F.col("id").alias("dst"), "auth").hint("merge"), "dst"
+            )
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("auth").alias("raw")),
             "hub",
@@ -416,16 +447,21 @@ def pagerank(
     Returns (id, rank). Dangling vertices (degree 0) keep the teleport
     mass only. Float shuffle-sum order varies per run → rows-only
     correctness; ranks are comparable after round().
+
+    The walk runs the recurrence scaled by the vertex count n (start
+    1, teleport 1 - damping, as the exact keys do in micro-units) and
+    divides by n at the end: n is the walk's observed output row count,
+    so no count job runs outside the loop.
     """
-    n = vertices.count()
-    return _rank_walk(
+    ranks, n = _rank_walk(
         vertices,
         edges,
-        F.lit(1.0 / n),
+        F.lit(1.0),
         F.col("rank") / F.col("d"),
-        F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("c"),
+        F.lit(1.0 - damping) + F.lit(damping) * F.col("c"),
         iterations,
     )
+    return ranks.select("id", (F.col("rank") / n).alias("rank"))
 
 
 def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
@@ -455,7 +491,11 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
             .localCheckpoint()
         )
         for _ in range(max_iter):
-            msgs = sym.join(c, sym.dst == c.id).select(sym.src.alias("id"), "c")
+            # sym is symmetric: keying on src (not dst) reaches the same
+            # neighbor values and co-locates with the layout
+            msgs = sym.join(c.hint("merge"), sym.src == c.id).select(
+                sym.dst.alias("id"), "c"
+            )
             hist = msgs.groupBy("id", "c").agg(F.count(F.lit(1)).alias("n"))
             acc0 = F.struct(
                 F.lit(0).cast("long").alias("cum"), F.lit(0).cast("long").alias("best")
@@ -476,7 +516,7 @@ def core_number(edges: DataFrame, max_iter: int = 64) -> DataFrame:
             )
             h = hist.groupBy("id").agg(h_of.alias("h"))
             c, seen = observed_checkpoint(
-                c.join(h, "id"),
+                c.hint("merge").join(h, "id"),
                 "id",
                 F.least(F.col("c"), F.col("h")).alias("c"),
                 changed=F.count_if(F.col("h") < F.col("c")),
@@ -556,7 +596,7 @@ def personalized_pagerank(
         F.col("rank") / F.col("d"),
         (1.0 - damping) * seed + F.lit(damping) * F.col("c"),
         iterations,
-    )
+    )[0]
 
 
 def shortest_paths_weighted(
@@ -688,7 +728,7 @@ def pregel_run(
         sym = scope.layout(symmetrize(edges, directed=directed), "src")
         for step in range(max_iter):
             msgs = (
-                sym.join(state, sym.src == state.id)
+                sym.join(state.hint("merge"), sym.src == state.id)
                 .select(F.col("dst").alias("id"), message.alias("msg"))
                 .groupBy("id")
                 .agg(merge(F.col("msg")).alias("msg"))
@@ -734,12 +774,12 @@ def betweenness_sampled(
     shuffle-sum ordering (tests compare with tolerance). Returns (id,
     betweenness) for every vertex.
     """
-    n_vertices = vertices.count()
     n_s = max(1, len(sources))
     spark = vertices.sparkSession
     roots = spark.createDataFrame([(int(s),) for s in sources], "root long")
     delta_frames: list[DataFrame] = []
     with LoopScope(spark) as scope:
+        n_vertices = vertices.count()
         sym = scope.layout(symmetrize(edges), "src")
         lvl0, seen = observed_checkpoint(
             roots.join(vertices, roots.root == vertices.id).select(
@@ -754,7 +794,7 @@ def betweenness_sampled(
         for d in range(1, max_depth + 1):
             frontier = levels[-1]
             msgs = (
-                sym.join(frontier, sym.src == frontier.id)
+                sym.join(frontier.hint("merge"), sym.src == frontier.id)
                 .select("root", F.col("dst").alias("id"), "sigma")
                 .join(visited, ["root", "id"], "left_anti")
                 .groupBy("root", "id")

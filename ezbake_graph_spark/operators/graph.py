@@ -778,6 +778,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     while True:
         extended = (
             reach.alias("r")
+            .hint("merge")
             .join(edges.alias("e"), F.col("r.dst") == F.col("e.src"))
             .select(F.col("r.src").alias("src"), F.col("e.dst").alias("dst"))
         )
@@ -996,8 +997,8 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the symmetrized part-supplier graph; every vertex has degree ≥ 1 by
     construction, so no dangling-mass term is needed."""
     edges = bipartite_edges(spark, sf_dir)
-    pr = _rank_walk(
-        graph_vertices(edges),
+    pr, _ = _rank_walk(
+        None,
         edges,
         F.lit(1_000_000).cast("long"),
         F.expr("rank div d"),
@@ -1065,8 +1066,8 @@ def graph_ppr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output."""
     seed = (F.col("id") == 1).cast("long")
     edges = bipartite_edges(spark, sf_dir)
-    pr = _rank_walk(
-        graph_vertices(edges),
+    pr, _ = _rank_walk(
+        None,
         edges,
         seed * 1_000_000,
         F.expr("rank div d"),

@@ -131,14 +131,14 @@ def test_loop_leaves_session_as_found(spark, monkeypatch, name):
 
 
 def test_fit_sizes_the_width_by_rows(spark):
-    """The one width rule: ~250k rows per task, at least 4 and at most
-    the provisional width the scope pinned on entry."""
+    """The one width rule: one task per 250k rows, at most the
+    provisional width the scope pinned on entry, with no floor."""
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    provisional = max(4, min(session, spark.sparkContext.defaultParallelism))
+    provisional = min(session, spark.sparkContext.defaultParallelism)
     with pregel.LoopScope(spark) as scope:
         assert scope.partitions == provisional
+        scope.fit(1_000)
+        assert scope.partitions == 1
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         scope.fit(10**12)
         assert scope.partitions == provisional
-        scope.fit(1_000)
-        assert scope.partitions == 4
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"

@@ -9,6 +9,7 @@ import os
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from ezbake_graph_spark import registry, tables
 from ezbake_graph_spark.session import codegen_compiles
@@ -371,6 +372,68 @@ def test_star_join_runs_five_jobs_cached(spark):
     assert len(jobs) <= 5, f"{len(jobs)} jobs: {sorted(jobs)}"
 
 
+def _scan_paths(plan, path=()):
+    """For each InMemoryTableScan in a physical ``plan``, the node names
+    from the nearest join above it down to the scan."""
+    name = plan.nodeName()
+    path = (() if "Join" in name else path) + (name,)
+    if name == "InMemoryTableScan":
+        yield path
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _scan_paths(children.apply(i), path)
+
+
+def _superstep_plans(spark, monkeypatch, run) -> list:
+    """Executed plans of the frames ``run`` checkpoints through
+    ``pregel.observed_checkpoint`` that join something, planned under
+    the loop's conf (inside its LoopScope)."""
+    from ezbake_graph_spark.graph import pregel
+
+    real, plans = pregel.observed_checkpoint, []
+
+    def spy(df, *cols, **aggs):
+        plans.append(df._jdf.queryExecution().executedPlan())
+        return real(df, *cols, **aggs)
+
+    monkeypatch.setattr(pregel, "observed_checkpoint", spy)
+    run()
+    return [p for p in plans if "Join" in p.toString()]
+
+
+@pytest.mark.parametrize("loop", ["relax_min", "hits_walk"])
+def test_superstep_joins_state_to_layout_without_broadcast(spark, monkeypatch, loop):
+    """Every superstep joins the vertex state against the loop's
+    resident layout as a co-partitioned sort-merge join: no
+    BroadcastExchange (the checkpointed state inherits a small size
+    estimate, and a broadcast of it is a job of its own per superstep)
+    and no Exchange between the join and the layout's InMemoryTableScan
+    (the edge set never re-shuffles). 300k edges size the loop to 2-3
+    partitions, so the layout is hash-partitioned; at one partition
+    Spark plans the layout as a single partition and re-shuffles it
+    wherever the state side needs an exchange (CHANGES.md)."""
+    from ezbake_graph_spark.graph import pregel
+
+    edges = spark.range(300_000).select(
+        F.col("id").alias("src"), (F.col("id") % 1000).alias("dst")
+    )
+    run = {
+        "relax_min": lambda: pregel.connected_components(
+            edges.select(F.col("src").alias("id")), edges, max_iter=2
+        ).collect(),
+        "hits_walk": lambda: pregel.hits(edges, iterations=1).collect(),
+    }[loop]
+    plans = _superstep_plans(spark, monkeypatch, run)
+    assert len(plans) >= 2, "fewer than two superstep joins were checkpointed"
+    for plan in plans:
+        text = plan.toString()
+        assert "BroadcastExchange" not in text, text
+        paths = list(_scan_paths(plan))
+        assert paths, text
+        for path in paths:
+            assert "Exchange" not in path, (path, text)
+
+
 def _warm_jobs(spark, run) -> int:
     """Jobs the second of two ``run()`` calls schedules (the first
     warms the table cache)."""
@@ -397,24 +460,31 @@ def _warm_jobs(spark, run) -> int:
 # supersteps executes as one job; the float keys fell from 11 and 6
 # when they moved onto it. graph_path_reconstruct runs in a LoopScope:
 # with AQE on, its count varied from one identical call to the next.
+# Every superstep join of vertex state against a layout is a hinted
+# sort-merge join, and the width has no floor: the broadcast job each
+# superstep scheduled for its small checkpointed state is gone (before:
+# graph_wcc 10, graph_hits 85, graph_hits_exact 26, graph_kcore 10,
+# graph_betweenness_sampled 32); float PageRank reads its vertex count
+# off the walk's last checkpoint (was 10) and the exact pair skips the
+# closing vertex join (were 6).
 _LOOP_JOBS = {
-    "graph_wcc": 10,
-    "graph_pagerank": 10,
+    "graph_wcc": 7,
+    "graph_pagerank": 5,
     "graph_ppr": 5,
-    "graph_pagerank_exact": 6,
-    "graph_ppr_exact": 6,
+    "graph_pagerank_exact": 3,
+    "graph_ppr_exact": 3,
     "graph_path_reconstruct": 9,
-    "graph_hits_exact": 26,
-    "graph_bfs": 12,
-    "graph_sssp": 13,
-    "graph_temporal_reachability": 17,
-    "dedup_cluster_canonical": 13,
-    "graph_hits": 85,
-    "graph_kcore": 10,
-    "graph_ktruss": 6,
-    "graph_scc": 23,
-    "graph_closeness": 22,
-    "graph_betweenness_sampled": 32,
+    "graph_hits_exact": 15,
+    "graph_bfs": 8,
+    "graph_sssp": 9,
+    "graph_temporal_reachability": 12,
+    "dedup_cluster_canonical": 10,
+    "graph_hits": 46,
+    "graph_kcore": 7,
+    "graph_ktruss": 5,
+    "graph_scc": 21,
+    "graph_closeness": 20,
+    "graph_betweenness_sampled": 25,
     "graph_louvain": 18,
     "graph_louvain_weighted": 18,
     "graph_louvain_two_level": 36,
